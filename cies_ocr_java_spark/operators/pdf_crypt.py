@@ -216,6 +216,12 @@ class PdfDecryptor:
         if len(o_value) != 32 or len(u_value) != 32:
             raise ValueError("bad /O or /U length")
         p = int(pm.group(1))
+        # /P is a 32-bit permissions word that writers print signed (-4)
+        # or unsigned (4294967292); Algorithm 2 hashes its signed form
+        if not -(1 << 31) <= p < 1 << 32:
+            raise ValueError("bad /P")
+        if p >= 1 << 31:
+            p -= 1 << 32
         key = compute_encryption_key(b"", o_value, p, id0, r, n)
         expect = compute_u_value(key, id0, r)
         ok = (expect == u_value if r == 2

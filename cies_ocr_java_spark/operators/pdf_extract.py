@@ -13,8 +13,9 @@ Two implementations with identical semantics over the closed grammar
    with executor cores. At 100 TB this is the plan you want — a scan whose
    extraction is fused into the same codegen stage as the filters around it.
 2. ``pdf_layer_udf`` — vectorized pandas UDF (Arrow batches). Kept as the
-   extension point for grammar features regexes can't express (e.g. real
-   xref/stream parsing); tests pin that both paths agree on the corpus.
+   parity reference and the extension point for grammar features regexes
+   can't express (e.g. real xref/stream parsing); the pipeline does not use
+   it, and tests pin that both paths agree on the corpus.
 """
 
 from __future__ import annotations

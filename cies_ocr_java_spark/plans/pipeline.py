@@ -19,7 +19,13 @@ Scale notes (the part that matters at 100 TB / 10^12 docs):
     from shuffle files, never recomputed from source.
   * ALL branches — pdf/ocr/text/html — are pure column expressions
     (whole-stage codegen, zero Python; the Arrow/pandas implementations
-    remain as parity references and open-grammar extension points).
+    stay in the operator modules as parity references).
+  * The plan's Column expression trees are built ONCE per SparkContext
+    (session.per_context) and applied to each run's input. Building them
+    costs a py4j round trip per node, some 3,400 calls per plan, while they
+    depend only on column names and ``ocr_mode``; on a 200-doc incremental
+    tick that build (~0.6 s) outweighed the tick's whole executor CPU
+    (~0.45 s). A plan now pays a few hundred calls.
   * ONE more shuffle for assembly (groupBy doc_id). Nothing else shuffles.
   * Resume = left_anti join against SUCCEEDED doc_state (the one genuine
     join; AQE broadcasts it when small).
@@ -32,29 +38,23 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from cies_ocr_java_spark import schema as S
-from cies_ocr_java_spark.metrics import ExtractionMetrics
 from cies_ocr_java_spark.operators.assemble import assemble_documents
 from cies_ocr_java_spark.operators.classify import sniff_kind, span_invalid
-from cies_ocr_java_spark.operators.html_extract import (
-    html_main_text_col,
-    html_main_text_udf,
-)
+from cies_ocr_java_spark.operators.html_extract import html_main_text_col
 from cies_ocr_java_spark.operators.ocr_mock import (
     ocr_analysis_text_col,
     ocr_text_col,
 )
 from cies_ocr_java_spark.operators.pdf_extract import (
     pdf_layer_cols,
-    pdf_layer_udf,
     text_sufficient,
 )
 from cies_ocr_java_spark.functions.text import normalize_ws
+from cies_ocr_java_spark.session import per_context
 from cies_ocr_java_spark.sources.snapshots import SnapshotTable
-
-_OUT_COLS = ["doc_id", "offset", "out_kind", "out_text", "media_ref", "failed", "error", "used_ocr"]
 
 
 def flatten_spans(docs: DataFrame) -> DataFrame:
@@ -75,12 +75,11 @@ def flatten_spans(docs: DataFrame) -> DataFrame:
 def span_level_extract(
     docs: DataFrame,
     repartition_to: int | None = None,
-    use_pdf_udf: bool = False,
-    use_html_udf: bool = False,
     ocr_mode: str = "DETECTION",
 ) -> DataFrame:
     """The extraction kernel BEFORE per-doc assembly: documents -> one row
-    per span with its extracted output (_OUT_COLS). Stateless, so it runs
+    per span with its extracted output (doc_id, offset, out_kind, out_text,
+    media_ref, failed, error, used_ocr). Stateless, so it runs
     unchanged under Structured Streaming (streaming inputs skip the salt
     repartition — microbatches are the parallelism unit there); the batch
     pipeline is span_level_extract |> assemble_documents.
@@ -91,14 +90,9 @@ def span_level_extract(
     parsing. An earlier union-of-filtered-branches design planned 5 source
     scans (Catalyst pushed each branch filter below the repartition and broke
     exchange reuse) — at 100 TB that is 5 reads of the corpus; this is one.
-    ZERO Python by default: the HTML path too is a codegen'd expression
+    ZERO Python: the HTML path too is a codegen'd expression
     tree (html_main_text_col), so the whole kernel runs JVM-side — no
-    Arrow transfer at all. ``use_html_udf``/``use_pdf_udf`` switch in the
-    Arrow-vectorized pandas implementations, kept as parity references and
-    as the extension points where an open-grammar parser (or a real codec)
-    would slot in; the UDF path masks its input with when(kind=..., payload)
-    so non-matching rows ship a NULL through Arrow and Python cost stays
-    proportional to matching bytes only.
+    Arrow transfer at all.
 
     ``ocr_mode`` mirrors the reference's TextractMode switch
     (application.properties:3, DocumentExtractManager.java:304-308):
@@ -108,108 +102,92 @@ def span_level_extract(
     if ocr_mode not in ("DETECTION", "ANALYSIS"):
         raise ValueError(f"unknown ocr_mode {ocr_mode!r}")
     spark = docs.sparkSession
-    n = repartition_to or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    flat = flatten_spans(docs)
-    flat = flat.withColumn(
-        "ekind", sniff_kind(F.col("kind"), F.col("text"), F.col("media_ref"))
-    ).withColumn(
-        "invalid",
-        F.col("kind").isNull() & F.col("text").isNull() & F.col("media_ref").isNull()
-        | span_invalid(F.col("ekind"), F.col("text"), F.col("media_ref")),
+    ekind, invalid, parsed, out = _span_kernel(spark.sparkContext, ocr_mode)
+    flat = flatten_spans(docs).withColumn("ekind", ekind).withColumn(
+        "invalid", invalid
     )
     if not docs.isStreaming:
         # the salt shuffle: spans of one giant doc spread across n tasks
+        n = repartition_to or int(spark.conf.get("spark.sql.shuffle.partitions"))
         flat = flat.repartition(n, F.col("doc_id"), F.col("offset"))
+    return flat.select(*parsed).select(*out)
 
-    is_pdf = (F.col("ekind") == "pdf") & ~F.col("invalid")
-    if use_pdf_udf:
-        # mask outputs by is_pdf: the UDF sees NULL (-> '') for non-pdf rows
-        # and would flag them malformed otherwise
-        parsed = flat.withColumn(
-            "p", pdf_layer_udf(F.when(is_pdf, F.col("text")))
-        ).select(
-            "*",
-            F.when(is_pdf, F.col("p.pdf_text")).alias("pdf_text"),
-            F.when(is_pdf, F.col("p.page_count")).alias("page_count"),
-            F.when(is_pdf, F.col("p.pdf_malformed")).alias("pdf_malformed"),
-        ).drop("p")
-    else:
-        cols = pdf_layer_cols(F.col("text"))
-        parsed = flat.select(
-            "*",
-            F.when(is_pdf, cols["pdf_text"]).alias("pdf_text"),
-            F.when(is_pdf, cols["page_count"]).alias("page_count"),
-            F.when(is_pdf, cols["pdf_malformed"]).alias("pdf_malformed"),
-        )
 
-    sufficient = text_sufficient(F.col("pdf_text"), F.col("page_count"))
-    is_html = (F.col("ekind") == "html") & ~F.col("invalid")
-    if use_html_udf:
-        html_out = html_main_text_udf(F.when(is_html, F.col("text")))
-    else:
-        html_out = html_main_text_col(F.when(is_html, F.col("text")))
+@per_context
+def _span_kernel(ocr_mode: str) -> tuple[Column, Column, list[Column], list[Column]]:
+    """span_level_extract's Column trees: the two classify columns (ekind,
+    invalid), the PDF text-layer select and the output projection. They
+    depend only on column names and ``ocr_mode``, so they are built once
+    per SparkContext (session.per_context) and applied to every run's
+    input."""
+    kind, text, media_ref = F.col("kind"), F.col("text"), F.col("media_ref")
+    ekind, invalid = F.col("ekind"), F.col("invalid")
+    pdf_text, page_count = F.col("pdf_text"), F.col("page_count")
+    pdf_malformed = F.col("pdf_malformed")
 
+    is_pdf = (ekind == "pdf") & ~invalid
+    pdf = pdf_layer_cols(text)
+    parsed = [
+        F.col("*"),
+        F.when(is_pdf, pdf["pdf_text"]).alias("pdf_text"),
+        F.when(is_pdf, pdf["page_count"]).alias("page_count"),
+        F.when(is_pdf, pdf["pdf_malformed"]).alias("pdf_malformed"),
+    ]
+
+    sufficient = text_sufficient(pdf_text, page_count)
+    is_html = (ekind == "html") & ~invalid
+    no_text = F.lit(None).cast("string")
     out_text = (
-        F.when(F.col("invalid"), F.lit(None).cast("string"))
-        .when(F.col("ekind") == "media", F.lit(None).cast("string"))
-        .when(F.col("ekind") == "text", normalize_ws("text"))
-        .when(is_html, html_out)
-        .when(F.col("pdf_malformed"), F.lit(None).cast("string"))
-        .when(sufficient, F.col("pdf_text"))
+        F.when(invalid, no_text)
+        .when(ekind == "media", no_text)
+        .when(ekind == "text", normalize_ws(text))
+        .when(is_html, html_main_text_col(F.when(is_html, text)))
+        .when(pdf_malformed, no_text)
+        .when(sufficient, pdf_text)
         .otherwise(
-            ocr_analysis_text_col(F.col("text"))
+            ocr_analysis_text_col(text)
             if ocr_mode == "ANALYSIS"
-            else ocr_text_col(F.col("text"))
+            else ocr_text_col(text)
         )
     )
-    failed = F.col("invalid") | F.coalesce(F.col("pdf_malformed"), F.lit(False))
+    malformed = F.coalesce(pdf_malformed, F.lit(False))
     error = (
-        F.when(F.col("invalid"), F.lit("invalid span: missing required payload"))
-        .when(
-            F.coalesce(F.col("pdf_malformed"), F.lit(False)),
-            F.lit("malformed pdf payload"),
-        )
+        F.when(invalid, F.lit("invalid span: missing required payload"))
+        .when(malformed, F.lit("malformed pdf payload"))
         .cast("string")
     )
-    used_ocr = is_pdf & ~F.coalesce(F.col("pdf_malformed"), F.lit(True)) & ~sufficient
-
-    all_spans = parsed.select(
-        "doc_id",
-        "offset",
-        F.when(F.col("ekind") == "media", F.lit("media"))
+    used_ocr = is_pdf & ~F.coalesce(pdf_malformed, F.lit(True)) & ~sufficient
+    out = [
+        F.col("doc_id"),
+        F.col("offset"),
+        F.when(ekind == "media", F.lit("media"))
         .otherwise(F.lit("text"))
         .alias("out_kind"),
         out_text.alias("out_text"),
-        F.when(F.col("ekind") == "media", F.col("media_ref"))
-        .cast("string")
-        .alias("media_ref"),
-        failed.alias("failed"),
+        F.when(ekind == "media", media_ref).cast("string").alias("media_ref"),
+        (invalid | malformed).alias("failed"),
         error.alias("error"),
         F.coalesce(used_ocr, F.lit(False)).alias("used_ocr"),
+    ]
+    return (
+        sniff_kind(kind, text, media_ref),
+        kind.isNull() & text.isNull() & media_ref.isNull()
+        | span_invalid(ekind, text, media_ref),
+        parsed,
+        out,
     )
-
-    return all_spans.select(*_OUT_COLS)
 
 
 def extract_spans(
     docs: DataFrame,
     repartition_to: int | None = None,
-    use_pdf_udf: bool = False,
-    use_html_udf: bool = False,
     ocr_mode: str = "DETECTION",
 ) -> DataFrame:
     """Full extraction transform: documents -> assembled per-doc output
     (doc_id, spans, text, failed, error, partition_id, used_ocr).
     Pure transformation — no I/O, reusable from tests/bench/queries."""
     return assemble_documents(
-        span_level_extract(
-            docs,
-            repartition_to=repartition_to,
-            use_pdf_udf=use_pdf_udf,
-            use_html_udf=use_html_udf,
-            ocr_mode=ocr_mode,
-        )
+        span_level_extract(docs, repartition_to=repartition_to, ocr_mode=ocr_mode)
     )
 
 
@@ -395,7 +373,6 @@ def run(
             done = spans_done if done is None else done.union(spans_done).distinct()
         docs = docs.join(done, "doc_id", "left_anti")
 
-    metrics = ExtractionMetrics.create(spark.sparkContext)
     # Single-pass staged commit. The previous shape persisted the full
     # extraction output (DISK_ONLY) so three consumers (spans commit, state
     # commit, metrics agg) shared one compute — paying a serialize + write
@@ -410,33 +387,18 @@ def run(
     #     ~nothing to re-read; the spans/text bytes are never read back).
     # Net: one full-output write, no persist, flat heap. Measured at 150k
     # docs / 650 MB on tmpfs, local[8]: 12.6s -> ~9s; state pass 1.0->0.5s.
-    from pyspark.sql import Observation
-
     obs = Observation(f"extraction-metrics-{run_id}")
+    observed, staged = _run_columns(spark.sparkContext)
     result = extract_spans(
         docs, repartition_to=repartition_to, ocr_mode=ocr_mode
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("docs"),
-        F.sum(F.size("spans")).alias("spans"),
-        F.sum(F.length("text")).alias("bytes"),
-        F.sum(F.col("failed").cast("long")).alias("failures"),
-    )
+    ).observe(obs, *observed)
     os.makedirs(extracted_tbl.data_root, exist_ok=True)
     staging = os.path.join(
         extracted_tbl.data_root, f"_tmp-stage-{uuid.uuid4().hex}"
     )
-    (
-        result.select(
-            "doc_id", "spans", "text", "error", "partition_id", "used_ocr",
-            # int, not bool: hive-style partition path values only
-            # type-infer back cleanly for ints
-            F.col("failed").cast("int").alias("failed_part"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("failed_part")
-        .parquet(staging)
-    )
+    result.select(*staged).write.mode("overwrite").partitionBy(
+        "failed_part"
+    ).parquet(staging)
     agg = obs.get  # complete: the staged write was the (only) full action
 
     ok_dir = os.path.join(staging, "failed_part=0")
@@ -491,13 +453,14 @@ def run(
     # release staging remnants (failed partition + write markers); a crash
     # before this line leaves a GC-able _tmp orphan, nothing dangling
     shutil.rmtree(staging, ignore_errors=True)
-    metrics.docs_processed.add(int(agg["docs"] or 0))
-    metrics.spans_emitted.add(int(agg["spans"] or 0))
-    metrics.bytes_processed.add(int(agg["bytes"] or 0))
-    metrics.failures.add(int(agg["failures"] or 0))
+    m = {
+        "docs_processed": int(agg["docs"] or 0),
+        "spans_emitted": int(agg["spans"] or 0),
+        "bytes_processed": int(agg["bytes"] or 0),
+        "failures": int(agg["failures"] or 0),
+    }
     wall = time.time() - t0
     parallelism = spark.sparkContext.defaultParallelism
-    m = metrics.snapshot()
     # driver-side fast commit: one metrics row must not pay a Spark job
     metrics_tbl.commit_rows(
         [
@@ -516,3 +479,22 @@ def run(
         "parallelism": parallelism,
         **m,
     }
+
+
+@per_context
+def _run_columns() -> tuple[list[Column], list[Column]]:
+    """run()'s Observation aggregates and staged-write projection, built
+    once per SparkContext like the kernel's trees."""
+    observed = [
+        F.count(F.lit(1)).alias("docs"),
+        F.sum(F.size("spans")).alias("spans"),
+        F.sum(F.length("text")).alias("bytes"),
+        F.sum(F.col("failed").cast("long")).alias("failures"),
+    ]
+    staged = [
+        *map(F.col, ("doc_id", "spans", "text", "error", "partition_id", "used_ocr")),
+        # int, not bool: hive-style partition path values only
+        # type-infer back cleanly for ints
+        F.col("failed").cast("int").alias("failed_part"),
+    ]
+    return observed, staged

@@ -10,8 +10,12 @@ maxResults(1000) pagination, DocumentExtractManager.java:544).
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 # Bound Arrow transfer batches: one batch holds at most this many spans, so a
 # skew tail of multi-MB payload spans stays within a bounded memory envelope.
@@ -95,3 +99,26 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def per_context(build: Callable[..., _T]) -> Callable[..., _T]:
+    """Memoise ``build(*key)`` per live SparkContext: the wrapper is called
+    as ``get(sc, *key)`` and rebuilds only when ``sc`` is not the context
+    the cached value was built on.
+
+    For Column expression trees that depend on nothing but column names
+    and ``key``: building one costs a py4j round trip per node, so building
+    it once per context instead of once per plan saves thousands of
+    gateway calls per run. The context is compared by identity and held,
+    never its ``id()``, so Columns of a stopped JVM are never handed back
+    to its successor. Two threads racing on a cold key both build; the
+    trees are equal, so whichever lands is correct."""
+    built: dict[tuple, tuple[SparkContext, _T]] = {}
+
+    def get(sc: SparkContext, *key) -> _T:
+        hit = built.get(key)
+        if hit is None or hit[0] is not sc:
+            hit = built[key] = (sc, build(*key))
+        return hit[1]
+
+    return get

@@ -142,6 +142,35 @@ def test_html_jvm_and_udf_paths_agree_on_corpus(spark, corpus_dir):
     assert got == want
 
 
+def test_pdf_jvm_and_udf_paths_agree_on_corpus(spark, corpus_dir):
+    """pdf_layer_cols (codegen, the pipeline's path) and pdf_layer_udf
+    (Arrow/pandas, the parity reference) must produce IDENTICAL pdf_text,
+    page_count and pdf_malformed over every PDF span in the fixture
+    corpus, malformed ones included."""
+    from cies_ocr_java_spark.operators.pdf_extract import pdf_layer_udf
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    pdf = (
+        docs.select(F.explode("spans").alias("s"))
+        .where((F.col("s.kind") == "pdf") & F.col("s.text").isNotNull())
+        .select(F.col("s.text").alias("p"))
+    )
+    cols = pdf_layer_cols(F.col("p"))
+    rows = pdf.select(
+        F.struct(
+            cols["pdf_text"].alias("pdf_text"),
+            cols["page_count"].alias("page_count"),
+            cols["pdf_malformed"].alias("pdf_malformed"),
+        ).alias("jvm"),
+        pdf_layer_udf(F.col("p")).alias("udf"),
+    ).collect()
+    assert len(rows) > 20
+    assert any(r["jvm"]["pdf_malformed"] for r in rows)
+    assert not all(r["jvm"]["pdf_malformed"] for r in rows)
+    for r in rows:
+        assert r["jvm"].asDict() == r["udf"].asDict()
+
+
 def test_adversarial_three_way_parity_on_spark(spark):
     """Degradation contract, end to end on the JVM: for a deterministic
     sample of hostile payloads (the fixture generator's adversarial tier),

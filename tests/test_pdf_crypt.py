@@ -120,6 +120,29 @@ def test_decryptor_rejects_malformed_dicts():
             b"i" * 16)
 
 
+def test_unsigned_p_decrypts_like_its_signed_twin():
+    """Writers may print the /P permissions word unsigned: /P 4294967292
+    is /P -4 and must derive the same key, not crash struct.pack('<i');
+    a value wider than 32 bits is a ValueError (an error row)."""
+    id0 = b"i" * 16
+    o = compute_o_value(b"owner", b"", 3, 16)
+    key = compute_encryption_key(b"", o, -4, id0, 3, 16)
+    u = compute_u_value(key, id0, 3)
+
+    def enc_dict(p: bytes) -> bytes:
+        return (b"<< /Filter /Standard /V 2 /R 3 /Length 128 /O <"
+                + o.hex().encode() + b"> /U <" + u.hex().encode()
+                + b"> /P " + p + b" >>")
+
+    signed = PdfDecryptor.from_encrypt_dict(enc_dict(b"-4"), id0)
+    unsigned = PdfDecryptor.from_encrypt_dict(enc_dict(b"4294967292"), id0)
+    raw = bytes(range(64))
+    assert unsigned.decrypt(5, 0, raw) == signed.decrypt(5, 0, raw)
+    for wide in (b"4294967296", b"-2147483649"):
+        with pytest.raises(ValueError, match="bad /P"):
+            PdfDecryptor.from_encrypt_dict(enc_dict(wide), id0)
+
+
 @pytest.mark.parametrize("method", METHODS)
 def test_fuzz_never_raises(method):
     rng = random.Random(0xEC0 + METHODS.index(method))

@@ -1,6 +1,5 @@
-"""Scale-path and state-machine coverage: the New->Submitted transition,
-the pandas-UDF PDF execution path at pipeline level, and the salt shuffle's
-distribution of giant-document spans."""
+"""Scale-path and state-machine coverage: the New->Submitted transition
+and the salt shuffle's distribution of giant-document spans."""
 
 import duckdb
 from pyspark.sql import functions as F
@@ -39,18 +38,6 @@ def test_record_submitted_state_transition(spark, corpus_dir, tmp_path):
         assert finals[d] == STATUS_SUCCEEDED
     # job handle assigned at submission (jobTag analog)
     assert all(r["job_id"] for r in submitted.collect())
-
-
-def test_pdf_udf_path_matches_jvm_path(spark, corpus_dir):
-    """extract_spans(use_pdf_udf=True) — the Arrow-vectorized PDF parser —
-    must produce identical assembled output to the default JVM path."""
-    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet").limit(60)
-    a = {r["doc_id"]: r for r in pipeline.extract_spans(docs).collect()}
-    b = {r["doc_id"]: r for r in pipeline.extract_spans(docs, use_pdf_udf=True).collect()}
-    assert set(a) == set(b)
-    for d in a:
-        assert a[d]["spans"] == b[d]["spans"], d
-        assert a[d]["failed"] == b[d]["failed"], d
 
 
 def test_salt_shuffle_spreads_giant_docs(spark):

@@ -36,7 +36,6 @@ def main() -> int:
     ap.add_argument("--blocks", type=int, default=500)
     ap.add_argument("--threads", type=int, default=8)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--udf-path", action="store_true", help="use the Arrow/pandas PDF parser (per-span Python cost — the expensive-extractor regime the salt exists for)")
     ap.add_argument("--report", default=os.path.join(REPO, "BENCH_SCALING.md"))
     args = ap.parse_args()
 
@@ -92,7 +91,7 @@ def main() -> int:
 
     def run_extraction() -> float:
         t0 = time.time()
-        pl.extract_spans(src, use_pdf_udf=args.udf_path).write.format("noop").mode("overwrite").save()
+        pl.extract_spans(src).write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
     results = {}
@@ -108,7 +107,6 @@ def main() -> int:
 
     summary = {
         "metric": "skew_salt_speedup",
-        "extractor": "pandas_udf" if args.udf_path else "codegen",
         "docs": args.docs,
         "mega_spans": args.mega_spans,
         "threads": args.threads,
@@ -123,7 +121,7 @@ def main() -> int:
         f.write(
             f"\n## Skew experiment {stamp} — {args.docs} docs + one "
             f"{args.mega_spans}-span mega-doc, local[{args.threads}], "
-            f"median of {args.runs}, extractor={'pandas_udf' if args.udf_path else 'codegen'}\n\n"
+            f"median of {args.runs}\n\n"
             f"| variant | wall (s) |\n|---|---|\n"
             f"| salted repartition (default) | {results['salted']} |\n"
             f"| salt removed | {results['unsalted']} |\n\n"
