@@ -27,6 +27,12 @@ Scale notes (the part that matters at 100 TB / 10^12 docs):
     tick that build (~0.6 s) outweighed the tick's whole executor CPU
     (~0.45 s). A plan now pays a few hundred calls.
   * ONE more shuffle for assembly (groupBy doc_id). Nothing else shuffles.
+  * ONE Spark action per run: the staged write. doc_state is control-plane
+    data (the reference's S3 object tags), so the driver derives its rows
+    from the staged files' lineage columns with pyarrow and commits them
+    like the metrics row. A second Spark query for it cost a 200-doc tick
+    3 of its 7 jobs and 4 codegen compiles (its snapshot-id literal was
+    inlined into generated code); pyarrow takes 0.1-0.2 CPU-s at 150k docs.
   * Resume = left_anti join against SUCCEEDED doc_state (the one genuine
     join; AQE broadcasts it when small).
 """
@@ -53,7 +59,7 @@ from cies_ocr_java_spark.operators.pdf_extract import (
     text_sufficient,
 )
 from cies_ocr_java_spark.functions.text import normalize_ws
-from cies_ocr_java_spark.session import per_context
+from cies_ocr_java_spark.session import job_phase, per_context
 from cies_ocr_java_spark.sources.snapshots import SnapshotTable
 
 
@@ -251,14 +257,15 @@ def run_incremental(
             "bytes_processed": 0,
             "failures": 0,
         }
-    try:
-        delta = src.read_changes(spark, from_snapshot=last, to_snapshot=current)
-        clean = out_tbl.current_snapshot_id() == last_out_sid
-        resume = not clean  # crash window -> repair; clean -> zero history scan
-    except ValueError:
-        # overwrite/compact in range: full read + resume dedup this tick
-        delta = src.read(spark)
-        resume = True
+    with job_phase(spark.sparkContext, "read-changes"):
+        try:
+            delta = src.read_changes(spark, from_snapshot=last, to_snapshot=current)
+            clean = out_tbl.current_snapshot_id() == last_out_sid
+            resume = not clean  # crash window -> repair; clean -> no history scan
+        except ValueError:
+            # overwrite/compact in range: full read + resume dedup this tick
+            delta = src.read(spark)
+            resume = True
     m = run(
         spark,
         delta,
@@ -270,7 +277,7 @@ def run_incremental(
     )
     cursor_tbl.commit_rows(
         [(int(current), str(m["run_id"]))],
-        _CURSOR_SCHEMA,
+        S.INGEST_CURSOR,
         mode="append",
         meta={
             "input_snapshot_id": int(current),
@@ -278,20 +285,6 @@ def run_incremental(
         },
     )
     return {**m, "input_snapshot_from": last, "input_snapshot_to": current}
-
-
-def _cursor_schema():
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [
-            T.StructField("input_snapshot_id", T.LongType(), False),
-            T.StructField("run_id", T.StringType()),
-        ]
-    )
-
-
-_CURSOR_SCHEMA = _cursor_schema()
 
 
 def _write_empty_staged(path: str) -> None:
@@ -326,6 +319,7 @@ def run(
     snapshot — checkpoint/restart replaces the reference's async retry."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
+    sc = spark.sparkContext
     extracted_tbl = SnapshotTable(os.path.join(output_root, "extracted_spans"))
     state_tbl = SnapshotTable(os.path.join(output_root, "doc_state"))
     metrics_tbl = SnapshotTable(os.path.join(output_root, "metrics"))
@@ -339,56 +333,54 @@ def run(
         # (derivable because the adopted data files carry the lineage
         # columns, schema.EXTRACTED_SPANS_STAGED). Invariant after any
         # run: extracted doc_ids ⊆ doc_state SUCCEEDED doc_ids.
-        done = None
-        if state_tbl.exists():
-            done = (
-                state_tbl.read(spark)
-                .where(F.col("status") == S.STATUS_SUCCEEDED)
-                .select("doc_id")
-                .distinct()
-            )
-        if extracted_tbl.exists():
-            committed = extracted_tbl.read(spark)
-            orphans = (
-                committed.join(done, "doc_id", "left_anti")
-                if done is not None
-                else committed
-            )
-            repair = orphans.select(
-                "doc_id",
-                F.lit(S.STATUS_SUCCEEDED).alias("status"),
-                F.when(
-                    F.col("used_ocr"),
-                    F.concat(F.lit("repair/"), F.col("doc_id")),
-                ).alias("job_id"),
-                F.col("partition_id"),
-                F.lit(extracted_tbl.current_snapshot_id())
-                .cast("long")
-                .alias("snapshot_id"),
-                F.col("error"),
-            )
-            if not repair.isEmpty():
-                state_tbl.commit(repair, mode="append")
-            spans_done = committed.select("doc_id").distinct()
-            done = spans_done if done is None else done.union(spans_done).distinct()
+        done = repair = None
+        with job_phase(sc, "resume-scan"):
+            if state_tbl.exists():
+                done = (
+                    state_tbl.read(spark)
+                    .where(F.col("status") == S.STATUS_SUCCEEDED)
+                    .select("doc_id")
+                    .distinct()
+                )
+            if extracted_tbl.exists():
+                committed = extracted_tbl.read(spark)
+                orphans = (
+                    committed.join(done, "doc_id", "left_anti")
+                    if done is not None
+                    else committed
+                )
+                repair = orphans.select(
+                    "doc_id",
+                    F.lit(S.STATUS_SUCCEEDED).alias("status"),
+                    F.when(
+                        F.col("used_ocr"),
+                        F.concat(F.lit("repair/"), F.col("doc_id")),
+                    ).alias("job_id"),
+                    F.col("partition_id"),
+                    F.lit(extracted_tbl.current_snapshot_id())
+                    .cast("long")
+                    .alias("snapshot_id"),
+                    F.col("error"),
+                )
+                spans_done = committed.select("doc_id").distinct()
+                done = spans_done if done is None else done.union(spans_done).distinct()
+        if repair is not None:
+            with job_phase(sc, "repair"):
+                if not repair.isEmpty():
+                    state_tbl.commit(repair, mode="append")
         docs = docs.join(done, "doc_id", "left_anti")
 
-    # Single-pass staged commit. The previous shape persisted the full
-    # extraction output (DISK_ONLY) so three consumers (spans commit, state
-    # commit, metrics agg) shared one compute — paying a serialize + write
-    # + read cycle of the ENTIRE output on top of the parquet write itself.
-    # Now the one action writes the output parquet directly, partitioned by
-    # the failed flag:
+    # Single-pass staged commit: the one Spark action writes the output
+    # parquet directly, partitioned by the failed flag:
     #   * metrics ride that action via Observation (no extra pass);
     #   * the ok partition dir is ADOPTED into extracted_spans by rename
     #     (SnapshotTable.adopt_dir — zero rewrite);
-    #   * doc_state derives from a column-pruned scan of the files just
-    #     written (parquet is columnar: the four small state columns cost
-    #     ~nothing to re-read; the spans/text bytes are never read back).
-    # Net: one full-output write, no persist, flat heap. Measured at 150k
-    # docs / 650 MB on tmpfs, local[8]: 12.6s -> ~9s; state pass 1.0->0.5s.
+    #   * doc_state rows derive on the driver from the four lineage columns
+    #     of the files just written (_doc_state_rows: pyarrow, no Spark
+    #     job) and commit through commit_rows like the metrics row.
+    # Net: one full-output write, no persist, flat heap, and no job after it.
     obs = Observation(f"extraction-metrics-{run_id}")
-    observed, staged = _run_columns(spark.sparkContext)
+    observed, staged = _run_columns(sc)
     result = extract_spans(
         docs, repartition_to=repartition_to, ocr_mode=ocr_mode
     ).observe(obs, *observed)
@@ -396,9 +388,10 @@ def run(
     staging = os.path.join(
         extracted_tbl.data_root, f"_tmp-stage-{uuid.uuid4().hex}"
     )
-    result.select(*staged).write.mode("overwrite").partitionBy(
-        "failed_part"
-    ).parquet(staging)
+    with job_phase(sc, "extract+stage"):
+        result.select(*staged).write.mode("overwrite").partitionBy(
+            "failed_part"
+        ).parquet(staging)
     agg = obs.get  # complete: the staged write was the (only) full action
 
     ok_dir = os.path.join(staging, "failed_part=0")
@@ -410,46 +403,13 @@ def run(
         _write_empty_staged(ok_dir)
     out_sid = extracted_tbl.adopt_dir(ok_dir, mode="append")
 
-    state_cols = ["doc_id", "partition_id", "used_ocr", "error"]
     snap_dir = os.path.join(extracted_tbl.data_root, f"snap-{out_sid:06d}")
-    state_src = (
-        spark.read.parquet(snap_dir)
-        .select(*state_cols)
-        .withColumn("failed", F.lit(False))
-    )
-    if os.path.isdir(failed_dir):
-        state_src = state_src.unionAll(
-            spark.read.parquet(failed_dir)
-            .select(*state_cols)
-            .withColumn("failed", F.lit(True))
-        )
-
+    state, submitted = _doc_state_rows(snap_dir, failed_dir, run_id, out_sid)
     if record_submitted:
         # optional fidelity to the New->Submitted transition for OCR-path
-        # docs (DocumentExtractManager.java:310); a cheap pruned-scan pass.
-        submitted = state_src.where(F.col("used_ocr")).select(
-            "doc_id",
-            F.lit(S.STATUS_SUBMITTED).alias("status"),
-            F.concat(F.lit(run_id), F.lit("/"), F.col("doc_id")).alias("job_id"),
-            F.col("partition_id"),
-            F.lit(None).cast("long").alias("snapshot_id"),
-            F.lit(None).cast("string").alias("error"),
-        )
-        state_tbl.commit(submitted, mode="append")
-
-    state = state_src.select(
-        "doc_id",
-        F.when(F.col("failed"), S.STATUS_FAILED)
-        .otherwise(S.STATUS_SUCCEEDED)
-        .alias("status"),
-        F.when(
-            F.col("used_ocr"), F.concat(F.lit(run_id), F.lit("/"), F.col("doc_id"))
-        ).alias("job_id"),
-        F.col("partition_id"),
-        F.lit(out_sid).cast("long").alias("snapshot_id"),
-        "error",
-    )
-    state_sid = state_tbl.commit(state, mode="append")
+        # docs (DocumentExtractManager.java:310)
+        state_tbl.commit_rows(submitted, S.DOC_STATE)
+    state_sid = state_tbl.commit_rows(state, S.DOC_STATE)
     # release staging remnants (failed partition + write markers); a crash
     # before this line leaves a GC-able _tmp orphan, nothing dangling
     shutil.rmtree(staging, ignore_errors=True)
@@ -460,7 +420,7 @@ def run(
         "failures": int(agg["failures"] or 0),
     }
     wall = time.time() - t0
-    parallelism = spark.sparkContext.defaultParallelism
+    parallelism = sc.defaultParallelism
     # driver-side fast commit: one metrics row must not pay a Spark job
     metrics_tbl.commit_rows(
         [
@@ -498,3 +458,41 @@ def _run_columns() -> tuple[list[Column], list[Column]]:
         F.col("failed").cast("int").alias("failed_part"),
     ]
     return observed, staged
+
+
+def _doc_state_rows(ok_dir: str, failed_dir: str, run_id: str, out_sid: int):
+    """doc_state rows for the docs a run staged, derived on the driver from
+    the four lineage columns of the staged files (pyarrow, no Spark job;
+    parquet is columnar, so the spans/text bytes are never read). Returns
+    (final rows, Submitted rows): SUCCEEDED for the adopted ``ok_dir``,
+    FAILED for ``failed_dir`` (absent when nothing failed), each in
+    snapshot ``out_sid``; the Submitted rows are the OCR-path docs, with no
+    snapshot yet. An OCR-path doc carries job handle ``<run_id>/<doc_id>``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    parts = []
+    for d, status in ((ok_dir, S.STATUS_SUCCEEDED), (failed_dir, S.STATUS_FAILED)):
+        if os.path.isdir(d):
+            t = pq.read_table(d, columns=["doc_id", "partition_id", "used_ocr", "error"])
+            parts.append(t.append_column("status", pa.repeat(status, t.num_rows)))
+    # an empty ok dir (_write_empty_staged) has a non-null doc_id field
+    src = pa.concat_tables(parts, promote_options="default")
+    job_id = pc.binary_join_element_wise(f"{run_id}/", src["doc_id"], "")
+    state = pa.table({
+        "doc_id": src["doc_id"],
+        "status": src["status"],
+        "job_id": pc.if_else(src["used_ocr"], job_id, pa.scalar(None, pa.string())),
+        "partition_id": src["partition_id"],
+        "snapshot_id": pa.repeat(pa.scalar(out_sid, pa.int64()), src.num_rows),
+        "error": src["error"],
+    })
+    ocr = state.filter(src["used_ocr"])
+    n = ocr.num_rows
+    submitted = (
+        ocr.set_column(1, "status", pa.repeat(S.STATUS_SUBMITTED, n))
+        .set_column(4, "snapshot_id", pa.nulls(n, pa.int64()))
+        .set_column(5, "error", pa.nulls(n, pa.string()))
+    )
+    return state, submitted

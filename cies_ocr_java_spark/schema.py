@@ -85,6 +85,14 @@ METRICS = T.StructType(
     ]
 )
 
+# run_incremental's cursor: the last input snapshot consumed, per run
+INGEST_CURSOR = T.StructType(
+    [
+        T.StructField("input_snapshot_id", T.LongType(), False),
+        T.StructField("run_id", T.StringType()),
+    ]
+)
+
 # Lifecycle states — DocumentExtractStatus.java:6-10. The inconsistent
 # capitalization is deliberate in the reference (SUCCEEDED/FAILED arrive
 # verbatim from the OCR service's notification payload).

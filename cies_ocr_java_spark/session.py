@@ -10,7 +10,8 @@ maxResults(1000) pagination, DocumentExtractManager.java:544).
 from __future__ import annotations
 
 import os
-from typing import Callable, TypeVar
+from contextlib import contextmanager
+from typing import Callable, Iterator, TypeVar
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
@@ -122,3 +123,19 @@ def per_context(build: Callable[..., _T]) -> Callable[..., _T]:
         return hit[1]
 
     return get
+
+
+@contextmanager
+def job_phase(sc: SparkContext, name: str) -> Iterator[None]:
+    """Label the Spark jobs launched inside the block with the job
+    description ``name``, so the UI / REST store attributes their stages
+    to a phase. A description the caller already set wins (it is the
+    caller's attribution, e.g. a benchmark's tracer); on exit the caller's
+    description, or none, is back in place."""
+    prev = sc.getLocalProperty("spark.job.description")
+    if prev is None:
+        sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)

@@ -2,13 +2,33 @@
 resume-from-checkpoint (the reference's New->Submitted->SUCCEEDED/FAILED
 state machine as batch stage boundaries, SURVEY.md §2.7)."""
 
+from contextlib import contextmanager
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
 from cies_ocr_java_spark.plans import pipeline
-from cies_ocr_java_spark.schema import STATUS_FAILED, STATUS_SUCCEEDED
+from cies_ocr_java_spark.schema import DOC_STATE, STATUS_FAILED, STATUS_SUCCEEDED
 from cies_ocr_java_spark.sources.snapshots import SnapshotTable
+
+
+@contextmanager
+def crash_on_commit_rows(monkeypatch, table: str):
+    """Make the driver-side commit (SnapshotTable.commit_rows) of the
+    output table ``table`` raise, as a crash at that point of run() would,
+    and expect run() to raise it."""
+    real = SnapshotTable.commit_rows
+
+    def exploding(self, rows, schema, *args, **kwargs):
+        if self.root.endswith(table):
+            raise RuntimeError(f"simulated crash before {table} commit")
+        return real(self, rows, schema, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "commit_rows", exploding)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        yield
+    monkeypatch.setattr(SnapshotTable, "commit_rows", real)
 
 
 def test_run_commits_and_resume(spark, corpus_dir, tmp_path):
@@ -24,10 +44,34 @@ def test_run_commits_and_resume(spark, corpus_dir, tmp_path):
     counts = {r["status"]: r["n"] for r in state.groupBy("status").agg(F.count("*").alias("n")).collect()}
     assert counts[STATUS_SUCCEEDED] + counts[STATUS_FAILED] == n_docs
 
-    # lineage columns present and populated
-    row = state.where(F.col("status") == STATUS_SUCCEEDED).first()
-    assert row["snapshot_id"] == m1["snapshot_id"]
-    assert row["partition_id"] is not None
+    # every row, FAILED included: DOC_STATE's columns and types, the run's
+    # spans snapshot, a job handle exactly for OCR-path docs (from the
+    # extracted row; FAILED docs have none, so from the golden), and the
+    # extracted row's partition
+    assert [(f.name, f.dataType) for f in state.schema] == [
+        (f.name, f.dataType) for f in DOC_STATE
+    ]
+    extracted_rows = {
+        r["doc_id"]: r
+        for r in SnapshotTable(f"{out_root}/extracted_spans")
+        .read(spark)
+        .select("doc_id", "partition_id", "used_ocr")
+        .collect()
+    }
+    golden_ocr = dict(
+        duckdb.sql(
+            f"select doc_id, used_ocr from read_parquet('{corpus_dir}/expected_state.parquet')"
+        ).fetchall()
+    )
+    for row in state.collect():
+        assert row["snapshot_id"] == m1["snapshot_id"]
+        ext = extracted_rows.get(row["doc_id"])
+        assert (ext is not None) == (row["status"] == STATUS_SUCCEEDED)
+        used_ocr = ext["used_ocr"] if ext is not None else golden_ocr[row["doc_id"]]
+        assert row["job_id"] == ("r1/" + row["doc_id"] if used_ocr else None)
+        if ext is not None:
+            assert row["partition_id"] is not None
+            assert row["partition_id"] == ext["partition_id"]
 
     # OCR-path docs carry a job handle (jobTag analog, DocumentExtractManager.java:487)
     exp_state = duckdb.sql(
@@ -116,25 +160,16 @@ def test_crash_between_spans_and_state_commits_is_repaired(
     state commit (the classic two-table crash window). The resumed run
     must NOT re-extract those docs (no duplicate spans) and must append
     their missing SUCCEEDED state rows (repair invariant:
-    extracted doc_ids ⊆ doc_state SUCCEEDED doc_ids)."""
-    from cies_ocr_java_spark.sources.snapshots import SnapshotTable
-
+    extracted doc_ids ⊆ doc_state SUCCEEDED doc_ids). doc_state commits
+    on the driver (SnapshotTable.commit_rows), so the crash is injected
+    there."""
     out_root = str(tmp_path / "outc")
     docs = spark.read.parquet(f"{corpus_dir}/documents.parquet").where(
         F.col("doc_id") < "doc-000030"
     )
 
-    real_commit = SnapshotTable.commit
-
-    def exploding_commit(self, df, mode="append", partition_by=None):
-        if self.root.endswith("doc_state"):
-            raise RuntimeError("simulated crash before state commit")
-        return real_commit(self, df, mode=mode, partition_by=partition_by)
-
-    monkeypatch.setattr(SnapshotTable, "commit", exploding_commit)
-    with pytest.raises(RuntimeError, match="simulated crash"):
+    with crash_on_commit_rows(monkeypatch, "doc_state"):
         pipeline.run(spark, docs, out_root, run_id="c1", resume=False)
-    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
 
     extracted = SnapshotTable(f"{out_root}/extracted_spans")
     n_committed = extracted.read(spark).count()
@@ -158,6 +193,76 @@ def test_crash_between_spans_and_state_commits_is_repaired(
     extracted.gc_orphans(tmp_grace_seconds=0)
     assert all(d.startswith("snap-")
                for d in __import__("os").listdir(extracted.data_root))
+
+
+def test_crash_between_state_and_metrics_commits_resumes_cleanly(
+    spark, corpus_dir, tmp_path, monkeypatch
+):
+    """Kill the run after the doc_state commit but before the metrics row.
+    Spans and state both landed, so the resumed run extracts nothing
+    again, and every doc keeps exactly one span row and one state row."""
+    out_root = str(tmp_path / "outm")
+    ok_ids = [
+        d for (d,) in duckdb.sql(
+            f"select doc_id from read_parquet('{corpus_dir}/expected_state.parquet') "
+            f"where status = '{STATUS_SUCCEEDED}' and doc_id < 'doc-000040'"
+        ).fetchall()
+    ]
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet").where(
+        F.col("doc_id").isin(ok_ids)
+    )
+
+    with crash_on_commit_rows(monkeypatch, "metrics"):
+        pipeline.run(spark, docs, out_root, run_id="m1", resume=False)
+    assert not SnapshotTable(f"{out_root}/metrics").exists()
+
+    m = pipeline.run(spark, docs, out_root, run_id="m2", resume=True)
+    assert m["docs_processed"] == 0
+    spans = SnapshotTable(f"{out_root}/extracted_spans").read(spark)
+    state = SnapshotTable(f"{out_root}/doc_state").read(spark)
+    for tbl in (spans, state):
+        per_doc = {r["doc_id"]: r["count"] for r in tbl.groupBy("doc_id").count().collect()}
+        assert per_doc == {d: 1 for d in ok_ids}
+    assert {r["status"] for r in state.collect()} == {STATUS_SUCCEEDED}
+
+
+def test_tick_runs_four_tagged_jobs_and_reuses_codegen(spark, corpus_dir, tmp_path):
+    """After one warm tick, a run_incremental tick over a new delta launches
+    at most 4 Spark jobs (the delta's footer read and the staged write),
+    each labelled with its phase, and compiles no codegen class: doc_state
+    commits on the driver, and no per-run literal is inlined into
+    generated code."""
+    sc = spark.sparkContext
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    src_root, out_root = str(tmp_path / "src"), str(tmp_path / "out")
+    src = SnapshotTable(src_root)
+
+    def tick(run_id: str, lo: str, hi: str) -> tuple[list, int]:
+        src.commit(docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
+        c0 = compiles.getCount()
+        sc.setJobGroup(run_id, None)  # count the tick's jobs; no description
+        try:
+            m = pipeline.run_incremental(spark, src_root, out_root, run_id=run_id)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert m["docs_processed"] > m["failures"] > 0
+        n_compiled = compiles.getCount() - c0
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        store = sc._jsc.sc().statusStore()
+        descriptions = [
+            store.job(j).description()
+            for j in sc.statusTracker().getJobIdsForGroup(run_id)
+        ]
+        return [d.get() if d.isDefined() else None for d in descriptions], n_compiled
+
+    tick("warm", "doc-000000", "doc-000080")
+    descriptions, n_compiled = tick("t2", "doc-000080", "doc-000160")
+    assert 0 < len(descriptions) <= 4, descriptions
+    assert all(descriptions), descriptions
+    assert set(descriptions) <= {"read-changes", "extract+stage"}
+    assert n_compiled == 0
 
 
 def test_run_incremental_consumes_only_appended_snapshots(spark, corpus_dir, tmp_path):

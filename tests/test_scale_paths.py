@@ -36,8 +36,10 @@ def test_record_submitted_state_transition(spark, corpus_dir, tmp_path):
     for d in ocr_docs:
         assert exp[d], f"{d} recorded Submitted but oracle says no OCR"
         assert finals[d] == STATUS_SUCCEEDED
-    # job handle assigned at submission (jobTag analog)
-    assert all(r["job_id"] for r in submitted.collect())
+    # job handle assigned at submission (jobTag analog); no snapshot yet
+    for r in submitted.collect():
+        assert r["job_id"] == "sub1/" + r["doc_id"]
+        assert r["snapshot_id"] is None
 
 
 def test_salt_shuffle_spreads_giant_docs(spark):

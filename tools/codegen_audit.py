@@ -2,11 +2,17 @@
 sf0.001 with spark.sql.codegen.fallback=false, so a generated method past
 the JVM 64 KB limit THROWS instead of silently interpreting (the
 intel_hex_parse lesson — interpreted fallback 10x'd the per-task cost and
-was invisible in every green correctness run). Usage:
+was invisible in every green correctness run).
+
+Each query is built and executed twice. The second execution should find
+every generated class in the codegen cache; a class it compiles again
+means a per-run literal (a path, an id, a timestamp) is inlined into the
+generated Java, so every run of that plan pays the compile. Usage:
 
     python tools/codegen_audit.py [--sf /root/testdata/sf0.001] [name ...]
 
-Prints one line per query: OK / COMPILE-FAIL / ERROR(<type>).
+Prints one line per query: OK with the classes the first and the second
+execution compiled, COMPILE-FAIL or ERROR(<type>).
 """
 
 from __future__ import annotations
@@ -29,13 +35,21 @@ def main() -> int:
 
     spark = get_spark(app_name="codegen_audit")
     spark.conf.set("spark.sql.codegen.fallback", "false")
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
     names = args.names or list(QUERIES)
-    n_fail = 0
+    n_fail = n_recompiling = 0
     for name in names:
         try:
-            QUERIES[name](spark, args.sf).write.format("noop") \
-                .mode("overwrite").save()
-            print(f"OK    {name}", flush=True)
+            counts = []
+            for _ in range(2):
+                c0 = compiles.getCount()
+                QUERIES[name](spark, args.sf).write.format("noop") \
+                    .mode("overwrite").save()
+                counts.append(compiles.getCount() - c0)
+            n_recompiling += counts[1] > 0
+            print(f"OK    {name} compiled={counts[0]} recompiled={counts[1]}",
+                  flush=True)
         except Exception as e:  # noqa: BLE001
             msg = str(e)
             if "InternalCompilerException" in msg or "grows beyond" in msg \
@@ -45,7 +59,8 @@ def main() -> int:
             else:
                 n_fail += 1
                 print(f"ERROR {name}: {type(e).__name__}", flush=True)
-    print(f"DONE {len(names) - n_fail}/{len(names)} ok", flush=True)
+    print(f"DONE {len(names) - n_fail}/{len(names)} ok, {n_recompiling} "
+          "recompiling on a second execution", flush=True)
     spark.stop()
     return 0 if not n_fail else 1
 
