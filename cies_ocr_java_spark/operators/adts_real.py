@@ -19,10 +19,9 @@ reference; codec-layer structure recovery is beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _RATES = [96000, 88200, 64000, 48000, 44100, 32000, 24000, 22050,
           16000, 12000, 11025, 8000, 7350]
@@ -127,17 +126,4 @@ _ADTS_SCHEMA = (
 
 def extract_adts_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_adts(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_frames", "n_crc_frames", "profile",
-                      "sample_rate", "channels"):
-                out[c] = out[c].astype("Int32")
-            out["payload_bytes"] = out["payload_bytes"].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _ADTS_SCHEMA)
+    return map_blobs(df, parse_adts, _ADTS_SCHEMA, id_col, content_col)

@@ -23,10 +23,10 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _LOCAL = struct.Struct("<4sHHHHHIIIHH")    # PK\x03\x04
 _CENTRAL = struct.Struct("<4sHHHHHHIIIHHHHHII")  # PK\x01\x02
@@ -510,25 +510,7 @@ TAR_FEATURES_SCHEMA = (
 def extract_tar_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> parsed tar rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_tar(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_members": pd.array(
-                        [r["n_members"] for r in rows], dtype="Int32"
-                    ),
-                    "total_bytes": pd.array(
-                        [r["total_bytes"] for r in rows], dtype="Int64"
-                    ),
-                    "text": [r["text"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, TAR_FEATURES_SCHEMA)
+    return map_blobs(df, parse_tar, TAR_FEATURES_SCHEMA, id_col, content_col)
 
 
 ZIP_FEATURES_SCHEMA = (
@@ -541,26 +523,7 @@ def extract_zip_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> parsed archive rows via one Arrow-batched
     mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_zip(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_members": pd.array(
-                        [r["n_members"] for r in rows], dtype="Int32"
-                    ),
-                    "methods": [r["methods"] for r in rows],
-                    "total_bytes": pd.array(
-                        [r["total_bytes"] for r in rows], dtype="Int64"
-                    ),
-                    "text": [r["text"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, ZIP_FEATURES_SCHEMA)
+    return map_blobs(df, parse_zip, ZIP_FEATURES_SCHEMA, id_col, content_col)
 
 
 # --- gzip (RFC 1952): the member-framed compression wrapper ----------------
@@ -737,52 +700,13 @@ GZIP_FEATURES_SCHEMA = (
 def extract_gzip_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> walked gzip rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_gzip(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_members": pd.array(
-                        [r["n_members"] for r in rows], dtype="Int32"
-                    ),
-                    "member_names": [r["member_names"] for r in rows],
-                    "total_bytes": pd.array(
-                        [r["total_bytes"] for r in rows], dtype="Int64"
-                    ),
-                    "text": [r["text"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, GZIP_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_gzip, GZIP_FEATURES_SCHEMA, id_col, content_col)
 
 
 def extract_targz_features(df: DataFrame, content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> tar.gz rows (gunzip -> verified tar walk)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_targz(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_members": pd.array(
-                        [r["n_members"] for r in rows], dtype="Int32"
-                    ),
-                    "total_bytes": pd.array(
-                        [r["total_bytes"] for r in rows], dtype="Int64"
-                    ),
-                    "text": [r["text"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, TAR_FEATURES_SCHEMA)
+    return map_blobs(df, parse_targz, TAR_FEATURES_SCHEMA, id_col, content_col)
 
 
 # --- streamed (bit-3) zips: sizes ride AFTER the data -----------------
@@ -915,20 +839,4 @@ def extract_zip_streamed_features(df: DataFrame,
     schema = ("doc_id long, n_members int, n_streamed int, "
               "n_signed_desc int, content_bytes bigint, "
               "content_sum bigint, error string")
-
-    def op(batches: Iterator[pd.DataFrame]
-           ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_zip_streamed(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_members", "n_streamed", "n_signed_desc"):
-                out[c] = out[c].astype("Int32")
-            for c in ("content_bytes", "content_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, schema)
+    return map_blobs(df, parse_zip_streamed, schema, id_col, content_col)

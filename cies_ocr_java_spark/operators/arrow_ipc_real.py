@@ -31,10 +31,10 @@ addressing-mechanism precedent this generalizes).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 ARROW_MAGIC = b"ARROW1"
 
@@ -286,18 +286,4 @@ _ARROW_SCHEMA = (
 
 def extract_arrow_features(df: DataFrame, content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_arrow_file(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_fields", "n_batches"):
-                out[c] = out[c].astype("Int32")
-            for c in ("total_rows", "null_count", "val_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _ARROW_SCHEMA)
+    return map_blobs(df, parse_arrow_file, _ARROW_SCHEMA, id_col, content_col)

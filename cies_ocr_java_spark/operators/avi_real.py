@@ -23,10 +23,10 @@ Reference parity: none — the reference hands media to Textract
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def _chunk(fourcc: bytes, payload: bytes) -> bytes:
@@ -190,22 +190,4 @@ def extract_avi_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> container metadata via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_avi(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("us_per_frame", "Int32"), ("total_frames", "Int32"),
-                ("width", "Int32"), ("height", "Int32"),
-                ("n_streams", "Int32"), ("video_handler", None),
-                ("n_video_chunks", "Int32"),
-                ("n_audio_chunks", "Int32"), ("movi_bytes", "Int64"),
-                ("idx_entries", "Int32"), ("idx_consistent", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, AVI_SCHEMA)
+    return map_blobs(df, parse_avi, AVI_SCHEMA, id_col, content_col)

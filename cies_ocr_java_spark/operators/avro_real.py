@@ -29,9 +29,7 @@ Reference parity: none — beyond-reference source-format operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.inflate import (
@@ -39,6 +37,7 @@ from cies_ocr_java_spark.operators.inflate import (
     deflate_raw,
     inflate_raw,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs, rows_or_error
 
 AVRO_MAGIC = b"Obj\x01"
 
@@ -120,11 +119,6 @@ def build_avro(records: list[tuple[int, str, float | None]],
             blob = deflate_raw(blob)
         out += encode_long(n) + encode_long(len(blob)) + blob + sync
     return bytes(out)
-
-
-_AVRO_NONE = {"rec_idx": None, "rid": None, "name": None,
-              "score_isnull": None, "score": None, "codec": None,
-              "n_blocks": None}
 
 
 def parse_avro(data: bytes | None) -> tuple[list[dict] | None,
@@ -233,20 +227,5 @@ def extract_avro_records(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> one row per Avro record via one
     Arrow-batched mapInPandas pass (no shuffle); malformed containers
     degrade to a single error row per document."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                rows, err = parse_avro(b)
-                if err is not None:
-                    out.append({"doc_id": int(i), **_AVRO_NONE,
-                                "error": err})
-                else:
-                    for r in rows:
-                        out.append({"doc_id": int(i), **r,
-                                    "error": None})
-            yield pd.DataFrame(
-                out, columns=["doc_id", *list(_AVRO_NONE), "error"])
-
-    return df.select(id_col, content_col).mapInPandas(op, AVRO_SCHEMA)
+    return map_blobs(df, rows_or_error(parse_avro), AVRO_SCHEMA, id_col,
+                     content_col)

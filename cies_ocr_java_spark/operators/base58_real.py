@@ -26,10 +26,10 @@ Reference parity: none — beyond-reference encoding operator.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 ALPHABET = "123456789ABCDEFGHJKLMNPQRSTUVWXYZabcdefghijkmnopqrstuvwxyz"
 _REV = {c: k for k, c in enumerate(ALPHABET)}
@@ -104,18 +104,4 @@ def extract_b58_docs(df: DataFrame, content_col: str = "content",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_b58_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("version", "Int32"), ("payload_hex", None),
-                ("payload_len", "Int32"), ("n_leading_ones", "Int32"),
-                ("verified", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, B58_SCHEMA)
+    return map_blobs(df, parse_b58_doc, B58_SCHEMA, id_col, content_col)

@@ -21,10 +21,10 @@ must produce the SAME digest). Error rows, never exceptions."""
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["bencode", "bdecode", "parse_torrent",
            "extract_torrent_features", "TORRENT_FEATURES_SCHEMA",
@@ -190,26 +190,5 @@ TORRENT_FEATURES_SCHEMA = (
 def extract_torrent_features(df: DataFrame, content_col: str = "content",
                              id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> metainfo rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_torrent(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "announce": [r["announce"] for r in rows],
-                    "name": [r["name"] for r in rows],
-                    "piece_length": pd.array(
-                        [r["piece_length"] for r in rows], dtype="Int64"),
-                    "n_pieces": pd.array(
-                        [r["n_pieces"] for r in rows], dtype="Int32"),
-                    "length": pd.array(
-                        [r["length"] for r in rows], dtype="Int64"),
-                    "infohash": [r["infohash"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, TORRENT_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_torrent, TORRENT_FEATURES_SCHEMA,
+                     id_col, content_col)

@@ -21,10 +21,9 @@ beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def enc_len(n: int, *, wide: int = 0) -> bytes:
@@ -154,18 +153,4 @@ _BER_SCHEMA = (
 
 def extract_ber_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_ber(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_values", "max_depth", "n_indefinite",
-                      "n_nonminimal", "n_constructed_strings"):
-                out[c] = out[c].astype("Int32")
-            out["content_bytes"] = out["content_bytes"] \
-                .astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _BER_SCHEMA)
+    return map_blobs(df, parse_ber, _BER_SCHEMA, id_col, content_col)

@@ -25,10 +25,10 @@ Reference parity: none — beyond-reference serialization operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAX_DEPTH = 32
 
@@ -260,21 +260,4 @@ def extract_bplist_docs(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded plist fields via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_bplist_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("rid", "Int64"), ("name", None), ("uname", None),
-                ("n_vals", "Int32"), ("vals_sum", "Int64"),
-                ("flag", "Int32"), ("payload_len", "Int32"),
-                ("n_objects", "Int32"), ("offset_size", "Int32"),
-                ("ref_size", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, BPLIST_SCHEMA)
+    return map_blobs(df, parse_bplist_doc, BPLIST_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference serialization operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAX_DEPTH = 32
 
@@ -223,21 +223,4 @@ def extract_bson_docs(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded fields via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_bson_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("rid", "Int64"), ("name", None), ("n_tags", "Int32"),
-                ("tags", None), ("ratio", "Float64"), ("oid", None),
-                ("blob_len", "Int32"), ("active", "Int32"),
-                ("note_isnull", "Int32"), ("nested_city", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, BSON_SCHEMA)
+    return map_blobs(df, parse_bson_doc, BSON_SCHEMA, id_col, content_col)

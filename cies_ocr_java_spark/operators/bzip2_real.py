@@ -28,10 +28,9 @@ Reference parity: none — beyond-reference codec operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _BLOCK_MAGIC = 0x314159265359
 _END_MAGIC = 0x177245385090
@@ -281,19 +280,4 @@ def extract_bzip2_docs(df: DataFrame, content_col: str = "content",
                        id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded-stream stats via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_bzip2_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_bytes", "Int64"), ("n_lines", "Int32"),
-                ("text_md5", None), ("level", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, BZIP2_SCHEMA)
+    return map_blobs(df, parse_bzip2_doc, BZIP2_SCHEMA, id_col, content_col)

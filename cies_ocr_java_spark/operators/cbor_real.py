@@ -35,10 +35,10 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["encode_cbor", "parse_cbor", "cbor_walk_features",
            "extract_cbor_features", "CBOR_FEATURES_SCHEMA", "MAX_DEPTH"]
@@ -307,27 +307,5 @@ CBOR_FEATURES_SCHEMA = (
 def extract_cbor_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> walked cbor rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [cbor_walk_features(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "int_sum": pd.array(
-                        [r["int_sum"] for r in rows], dtype="Int64"),
-                    "text": [r["text"] for r in rows],
-                    "n_items": pd.array(
-                        [r["n_items"] for r in rows], dtype="Int32"),
-                    "max_depth": pd.array(
-                        [r["max_depth"] for r in rows], dtype="Int32"),
-                    "n_bignums": pd.array(
-                        [r["n_bignums"] for r in rows], dtype="Int32"),
-                    "float_sum": [r["float_sum"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, CBOR_FEATURES_SCHEMA
-    )
+    return map_blobs(df, cbor_walk_features, CBOR_FEATURES_SCHEMA,
+                     id_col, content_col)

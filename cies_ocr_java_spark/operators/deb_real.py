@@ -30,9 +30,7 @@ Reference parity: none — beyond-reference container operator.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import (
@@ -42,6 +40,7 @@ from cies_ocr_java_spark.operators.archive import (
     parse_tar,
 )
 from cies_ocr_java_spark.operators.xz_real import xz_decode
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 AR_MAGIC = b"!<arch>\n"
 
@@ -202,20 +201,4 @@ def extract_deb_packages(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> package metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_deb(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_ar_members", "Int32"), ("package", None),
-                ("version", None), ("arch", None),
-                ("control_fields", "Int32"), ("data_files", "Int32"),
-                ("data_bytes", "Int64"), ("data_md5", None),
-                ("compression", None), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, DEB_SCHEMA)
+    return map_blobs(df, parse_deb, DEB_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference science-data operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 EXPLICIT_LE = "1.2.840.10008.1.2.1"
 _LONG_VRS = {b"OB", b"OW", b"OF", b"SQ", b"UT", b"UN"}
@@ -158,20 +158,4 @@ def extract_dicom_features(df: DataFrame,
                            id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> element + pixel facts via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_dicom(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("modality", None), ("patient", None),
-                ("instance", "Int32"), ("rows", "Int32"),
-                ("cols", "Int32"), ("pixel_sum", "Int64"),
-                ("n_elements", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, DICOM_SCHEMA)
+    return map_blobs(df, parse_dicom, DICOM_SCHEMA, id_col, content_col)

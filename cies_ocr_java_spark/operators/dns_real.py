@@ -28,10 +28,10 @@ pre-resolved endpoint).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs, rows_or_error
 
 QTYPE = {1: "A", 5: "CNAME", 16: "TXT"}
 _QTYPE_REV = {v: k for k, v in QTYPE.items()}
@@ -175,30 +175,11 @@ DNS_RR_SCHEMA = (
     "ttl bigint, rdata string, n_ptr_jumps int, error string"
 )
 
-_RR_NONE = {"rr_idx": None, "qname": None, "name": None, "rtype": None,
-            "ttl": None, "rdata": None, "n_ptr_jumps": None}
-
 
 def extract_dns_records(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per answer RR via one
     Arrow-batched mapInPandas pass (no shuffle); malformed messages
     degrade to a single error row per document."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                rows, err = parse_dns(b)
-                if err is not None:
-                    out.append({"doc_id": int(i), **_RR_NONE,
-                                "error": err})
-                else:
-                    for r in rows:
-                        out.append({"doc_id": int(i), **r,
-                                    "error": None})
-            yield pd.DataFrame(
-                out, columns=["doc_id", *list(_RR_NONE), "error"])
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, DNS_RR_SCHEMA)
+    return map_blobs(df, rows_or_error(parse_dns), DNS_RR_SCHEMA, id_col,
+                     content_col)

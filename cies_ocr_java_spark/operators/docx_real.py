@@ -32,12 +32,11 @@ depth on S10 (file-format parse)."""
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import build_zip, walk_zip_members
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _CT_XML = (
     '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
@@ -158,25 +157,4 @@ def extract_docx_paragraphs(df: DataFrame, content_col: str = "content",
                             id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per paragraph via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "para_idx": [], "text": [],
-                   "n_runs": [], "error": []}
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                for r in parse_docx(b):
-                    out["doc_id"].append(int(i))
-                    out["para_idx"].append(r["para_idx"])
-                    out["text"].append(r["text"])
-                    out["n_runs"].append(r["n_runs"])
-                    out["error"].append(r["error"])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "para_idx": pd.array(out["para_idx"], dtype="Int32"),
-                "text": out["text"],
-                "n_runs": pd.array(out["n_runs"], dtype="Int32"),
-                "error": out["error"],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, DOCX_PARAS_SCHEMA)
+    return map_blobs(df, parse_docx, DOCX_PARAS_SCHEMA, id_col, content_col)

@@ -32,10 +32,9 @@ Reference parity: none — debug-info recovery is beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def _uleb(v: int) -> bytes:
@@ -351,19 +350,4 @@ _DW_SCHEMA = (
 def extract_dwarf_features(df: DataFrame,
                            content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_line_programs(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_units", "n_files", "n_sequences",
-                      "n_rows"):
-                out[c] = out[c].astype("Int32")
-            for c in ("addr_sum", "line_sum", "end_addr_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _DW_SCHEMA)
+    return map_blobs(df, parse_line_programs, _DW_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — the reference hands media to Textract
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 # Container and leaf element ids (marker bits kept, per EBML).
 EBML_HEADER = 0x1A45DFA3
@@ -231,21 +231,4 @@ def extract_mkv_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> container metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_mkv(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("doctype", None), ("timestamp_scale", "Int64"),
-                ("duration_ticks", "Int64"), ("n_tracks", "Int32"),
-                ("video_codec", None), ("audio_codec", None),
-                ("width", "Int32"), ("height", "Int32"),
-                ("n_clusters", "Int32"), ("n_blocks", "Int32"),
-                ("media_bytes", "Int64"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, MKV_SCHEMA)
+    return map_blobs(df, parse_mkv, MKV_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference binary-metadata operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MACHINES = {0x3E: "x86_64", 0xB7: "aarch64"}
 _TYPES = {2: "EXEC", 3: "DYN"}
@@ -209,19 +209,4 @@ def extract_elf_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> binary provenance metadata via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_elf(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("machine", None), ("etype", None), ("endian", None),
-                ("n_sections", "Int32"), ("comment", None),
-                ("build_id", None), ("n_symbols", "Int32"),
-                ("sym_names", None), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, ELF_SCHEMA)
+    return map_blobs(df, parse_elf, ELF_SCHEMA, id_col, content_col)

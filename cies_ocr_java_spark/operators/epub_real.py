@@ -32,12 +32,11 @@ the container layer. Beyond-reference operator."""
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import build_zip, walk_zip_members
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 EPUB_MIMETYPE = "application/epub+zip"
 
@@ -191,30 +190,7 @@ def extract_epub_spine(df: DataFrame, content_col: str = "content",
                        id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per spine entry in reading order
     via one Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "spine_idx": [], "href": [],
-                   "title": [], "text": [], "error": []}
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                for r in parse_epub(b):
-                    out["doc_id"].append(int(i))
-                    out["spine_idx"].append(r["spine_idx"])
-                    out["href"].append(r["href"])
-                    out["title"].append(r["title"])
-                    out["text"].append(r["text"])
-                    out["error"].append(r["error"])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "spine_idx": pd.array(out["spine_idx"], dtype="Int32"),
-                "href": out["href"],
-                "title": out["title"],
-                "text": out["text"],
-                "error": out["error"],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, EPUB_SPINE_SCHEMA)
+    return map_blobs(df, parse_epub, EPUB_SPINE_SCHEMA, id_col, content_col)
 
 
 _SPAN_TOKEN_RE = re.compile(
@@ -270,30 +246,8 @@ def extract_epub_spans(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> interleaved (kind, text, media_ref,
     order) spans in spine-major reading order; one Arrow-batched
     mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "span_order": [], "kind": [],
-                   "text": [], "media_ref": [], "error": []}
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                for r in parse_epub_spans(b):
-                    out["doc_id"].append(int(i))
-                    out["span_order"].append(r["span_order"])
-                    out["kind"].append(r["kind"])
-                    out["text"].append(r["text"])
-                    out["media_ref"].append(r["media_ref"])
-                    out["error"].append(r["error"])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "span_order": pd.array(out["span_order"], dtype="Int32"),
-                "kind": out["kind"],
-                "text": out["text"],
-                "media_ref": out["media_ref"],
-                "error": out["error"],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, EPUB_SPANS_SCHEMA)
+    return map_blobs(df, parse_epub_spans, EPUB_SPANS_SCHEMA, id_col,
+                     content_col)
 
 
 EPUB_MEDIA_SPANS_SCHEMA = (
@@ -348,29 +302,5 @@ def extract_epub_media_spans(df: DataFrame, content_col: str = "content",
                              id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> spine-major interleaved spans with media
     decoded from the archive's own PNG members; one mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "span_order", "kind", "text",
-                                   "media_ref", "width", "height",
-                                   "ink_sum", "error")}
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                for r in parse_epub_media_spans(b):
-                    out["doc_id"].append(int(i))
-                    for k in ("span_order", "kind", "text", "media_ref",
-                              "width", "height", "ink_sum", "error"):
-                        out[k].append(r[k])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "span_order": pd.array(out["span_order"], dtype="Int32"),
-                "kind": out["kind"],
-                "text": out["text"],
-                "media_ref": out["media_ref"],
-                "width": pd.array(out["width"], dtype="Int32"),
-                "height": pd.array(out["height"], dtype="Int32"),
-                "ink_sum": pd.array(out["ink_sum"], dtype="Int64"),
-                "error": out["error"],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, EPUB_MEDIA_SPANS_SCHEMA)
+    return map_blobs(df, parse_epub_media_spans, EPUB_MEDIA_SPANS_SCHEMA,
+                     id_col, content_col)

@@ -27,10 +27,10 @@ Reference parity: none — the reference hands media to Textract
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 T_ASCII, T_SHORT, T_LONG, T_RATIONAL = 2, 3, 4, 5
 _SIZES = {T_ASCII: 1, T_SHORT: 2, T_LONG: 4, T_RATIONAL: 8}
@@ -235,19 +235,4 @@ def extract_exif_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> EXIF metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_exif(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("byte_order", None), ("make", None), ("model", None),
-                ("orientation", "Int32"), ("xres", "Int32"),
-                ("datetime_orig", None), ("pix_x", "Int32"),
-                ("pix_y", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, EXIF_SCHEMA)
+    return map_blobs(df, parse_exif, EXIF_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference science-data operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 BLOCK = 2880
 
@@ -142,20 +142,4 @@ def extract_fits_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> header + array facts via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_fits(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("bitpix", "Int32"), ("width", "Int32"),
-                ("height", "Int32"), ("telescope", None),
-                ("bzero", "Int32"), ("pixel_sum", "Int64"),
-                ("n_cards", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, FITS_SCHEMA)
+    return map_blobs(df, parse_fits, FITS_SCHEMA, id_col, content_col)

@@ -22,10 +22,10 @@ the audio sync byte (0xFF) following. Error rows, never exceptions."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_flac", "parse_flac", "extract_flac_features",
            "FLAC_FEATURES_SCHEMA"]
@@ -187,6 +187,13 @@ def parse_flac(data: bytes | None) -> dict:
         return {**none, "error": str(e)}
 
 
+def _flac_row(b: bytes | None) -> dict:
+    """parse_flac's row with the TITLE/ARTIST comments projected."""
+    r = parse_flac(b)
+    f = r["fields"] or {}
+    return {**r, "title": f.get("TITLE"), "artist": f.get("ARTIST")}
+
+
 FLAC_FEATURES_SCHEMA = (
     "doc_id long, sample_rate int, channels int, bits int, "
     "total_samples bigint, n_blocks int, vendor string, n_comments int, "
@@ -197,39 +204,4 @@ FLAC_FEATURES_SCHEMA = (
 def extract_flac_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> header rows projecting TITLE/ARTIST."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for b in pdf[content_col]:
-                r = parse_flac(b)
-                f = r.pop("fields") or {}
-                rows.append({**r, "title": f.get("TITLE"),
-                             "artist": f.get("ARTIST")})
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "sample_rate": pd.array(
-                        [r["sample_rate"] for r in rows], dtype="Int32"),
-                    "channels": pd.array(
-                        [r["channels"] for r in rows], dtype="Int32"),
-                    "bits": pd.array(
-                        [r["bits"] for r in rows], dtype="Int32"),
-                    "total_samples": pd.array(
-                        [r["total_samples"] for r in rows], dtype="Int64"),
-                    "n_blocks": pd.array(
-                        [r["n_blocks"] for r in rows], dtype="Int32"),
-                    "vendor": [r["vendor"] for r in rows],
-                    "n_comments": pd.array(
-                        [r["n_comments"] for r in rows], dtype="Int32"),
-                    "title": [r["title"] for r in rows],
-                    "artist": [r["artist"] for r in rows],
-                    "padding_bytes": pd.array(
-                        [r["padding_bytes"] for r in rows], dtype="Int32"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, FLAC_FEATURES_SCHEMA
-    )
+    return map_blobs(df, _flac_row, FLAC_FEATURES_SCHEMA, id_col, content_col)

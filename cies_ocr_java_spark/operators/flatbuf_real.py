@@ -22,10 +22,10 @@ Reference parity: none — beyond-reference serialization operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _N_SLOTS = 5
 
@@ -195,19 +195,4 @@ def extract_flatdocs(df: DataFrame, content_col: str = "content",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded fields via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_flatdoc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("rid", "Int64"), ("name", None), ("n_tags", "Int32"),
-                ("tags", None), ("score", "Float64"),
-                ("flags", "Int32"), ("n_present", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, FB_SCHEMA)
+    return map_blobs(df, parse_flatdoc, FB_SCHEMA, id_col, content_col)

@@ -22,10 +22,10 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def _amf_str(s: str) -> bytes:
@@ -210,18 +210,4 @@ _FLV_SCHEMA = (
 
 def extract_flv_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_flv(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_audio", "n_video", "n_script", "width",
-                      "height"):
-                out[c] = out[c].astype("Int32")
-            for c in ("payload_bytes", "duration_ms", "last_ts"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _FLV_SCHEMA)
+    return map_blobs(df, parse_flv, _FLV_SCHEMA, id_col, content_col)

@@ -23,10 +23,10 @@ Reference parity: none — beyond-reference ML-artifact operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 GGUF_MAGIC = b"GGUF"
 _T_U8, _T_I8, _T_U16, _T_I16 = 0, 1, 2, 3
@@ -224,21 +224,4 @@ def extract_gguf_features(df: DataFrame,
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> model facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_gguf(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("arch", None), ("model_name", None),
-                ("alignment", "Int32"), ("n_kv", "Int32"),
-                ("n_tensors", "Int32"), ("tensor_names", None),
-                ("total_params", "Int64"), ("value_sum", "Int64"),
-                ("n_vocab", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, GGUF_SCHEMA)
+    return map_blobs(df, parse_gguf, GGUF_SCHEMA, id_col, content_col)

@@ -22,10 +22,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 INDEX_MAGIC = b"DIRC"
 
@@ -124,19 +124,4 @@ def extract_index_features(df: DataFrame,
                            id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> staging-area facts via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_index(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("version", "Int32"), ("n_entries", "Int32"),
-                ("paths", None), ("total_size", "Int64"),
-                ("n_regular", "Int32"), ("n_exec", "Int32"),
-                ("checksum_ok", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, GI_SCHEMA)
+    return map_blobs(df, parse_index, GI_SCHEMA, id_col, content_col)

@@ -34,15 +34,14 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.inflate import (
     InflateError,
     inflate_zlib_stream,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs, rows_or_error
 
 OBJ_TYPES = {1: "commit", 2: "tree", 3: "blob", 4: "tag"}
 OFS_DELTA, REF_DELTA = 6, 7
@@ -310,30 +309,10 @@ GIT_PACK_SCHEMA = (
     "content_md5 string, error string"
 )
 
-_GP_NONE = {"obj_idx": None, "otype": None, "size": None, "oid": None,
-            "is_delta": None, "base_kind": None, "delta_depth": None,
-            "content_md5": None}
-
 
 def extract_pack_objects(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per pack object via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                rows, err = parse_pack(b)
-                if err is not None:
-                    out.append({"doc_id": int(i), **_GP_NONE,
-                                "error": err})
-                else:
-                    for r in rows:
-                        out.append({"doc_id": int(i), **r,
-                                    "error": None})
-            yield pd.DataFrame(
-                out, columns=["doc_id", *list(_GP_NONE), "error"])
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, GIT_PACK_SCHEMA)
+    return map_blobs(df, rows_or_error(parse_pack), GIT_PACK_SCHEMA,
+                     id_col, content_col)

@@ -26,12 +26,11 @@ Reference parity: none — font recovery is beyond-reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.sfnt_real import _csum
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _HEAD_MAGIC = 0x5F0F3CF5
 _MAGIC_SUM = 0xB1B0AFBA
@@ -333,19 +332,4 @@ _GLYF_SCHEMA = (
 def extract_glyf_features(df: DataFrame,
                           content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_glyf_font(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_glyphs", "n_empty", "n_contours",
-                      "n_points", "n_repeat_flags", "long_loca"):
-                out[c] = out[c].astype("Int32")
-            for c in ("x_extent_sum", "abs_delta_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _GLYF_SCHEMA)
+    return map_blobs(df, parse_glyf_font, _GLYF_SCHEMA, id_col, content_col)

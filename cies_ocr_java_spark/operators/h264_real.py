@@ -27,10 +27,9 @@ beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 class _BitReader:
@@ -274,17 +273,4 @@ _H264_SCHEMA = (
 
 def extract_h264_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_annexb(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("profile_idc", "level_idc", "width", "height",
-                      "frame_num_bits", "n_sps", "n_pps", "n_idr",
-                      "n_slices"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.mapInPandas(op, _H264_SCHEMA)
+    return map_blobs(df, parse_annexb, _H264_SCHEMA, id_col, content_col)

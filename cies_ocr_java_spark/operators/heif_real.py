@@ -25,9 +25,7 @@ trust — the mp4_real discipline). Error rows, never exceptions."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.mp4_real import (
@@ -36,6 +34,7 @@ from cies_ocr_java_spark.operators.mp4_real import (
     _U32,
     _walk,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_heif", "parse_heif", "extract_heif_features",
            "HEIF_FEATURES_SCHEMA"]
@@ -184,26 +183,4 @@ HEIF_FEATURES_SCHEMA = (
 def extract_heif_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> item-walk rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_heif(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "brand": [r["brand"] for r in rows],
-                    "n_items": pd.array(
-                        [r["n_items"] for r in rows], dtype="Int32"),
-                    "primary_id": pd.array(
-                        [r["primary_id"] for r in rows], dtype="Int32"),
-                    "primary_type": [r["primary_type"] for r in rows],
-                    "primary_sum": pd.array(
-                        [r["primary_sum"] for r in rows], dtype="Int64"),
-                    "items": [r["items"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, HEIF_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_heif, HEIF_FEATURES_SCHEMA, id_col, content_col)

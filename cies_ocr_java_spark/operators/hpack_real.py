@@ -32,10 +32,10 @@ Reference parity: none — beyond-reference wire-protocol operator
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _HUFF = [
     (13, 0x1FF8), (23, 0x7FFFD8), (28, 0xFFFFFE2), (28, 0xFFFFFE3), (28, 0xFFFFFE4),
@@ -419,18 +419,5 @@ _HPACK_SCHEMA = (
 
 def extract_hpack_features(df: DataFrame, content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_header_block(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_headers", "n_indexed", "n_literal", "n_never",
-                      "n_size_updates", "n_huff_strings", "dyn_entries",
-                      "dyn_size"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.mapInPandas(op, _HPACK_SCHEMA)
+    return map_blobs(df, parse_header_block, _HPACK_SCHEMA,
+                     id_col, content_col)

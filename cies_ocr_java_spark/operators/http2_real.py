@@ -24,9 +24,6 @@ beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.hpack_real import (
@@ -35,6 +32,7 @@ from cies_ocr_java_spark.operators.hpack_real import (
     _decode_str,
     encode_header_block,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _PREFACE = b"PRI * HTTP/2.0\r\n\r\nSM\r\n\r\n"
 _MAX_FRAME = 16384
@@ -255,20 +253,4 @@ _H2_SCHEMA = (
 def extract_http2_features(df: DataFrame,
                            content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_connection(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_frames", "n_streams", "n_headers",
-                      "n_settings", "n_pings",
-                      "goaway_last_stream", "dyn_entries"):
-                out[c] = out[c].astype("Int32")
-            for c in ("data_bytes", "window_delta"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _H2_SCHEMA)
+    return map_blobs(df, parse_connection, _H2_SCHEMA, id_col, content_col)

@@ -45,9 +45,7 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import build_zip, walk_zip_members
@@ -56,6 +54,7 @@ from cies_ocr_java_spark.operators.avro_real import (
     encode_long,
     encode_string,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 AVRO_MAGIC = b"Obj\x01"
 _SYNC = b"\x42" * 16
@@ -381,19 +380,6 @@ _ICE_SCHEMA = (
 def extract_iceberg_features(df: DataFrame, content_col: str = "content",
                              id_col: str = "doc_id", scan_lo: int = 20,
                              scan_hi: int = 40) -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_iceberg_table(
-                    None if blob is None else bytes(blob),
-                    scan_lo, scan_hi)
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("format_version", "n_snapshots", "n_manifests",
-                      "n_data_files", "n_scanned"):
-                out[c] = out[c].astype("Int32")
-            out["total_records"] = out["total_records"].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _ICE_SCHEMA)
+    return map_blobs(
+        df, lambda b: parse_iceberg_table(b, scan_lo, scan_hi), _ICE_SCHEMA,
+        id_col, content_col)

@@ -25,9 +25,7 @@ exception."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.multimodal import (
@@ -36,6 +34,7 @@ from cies_ocr_java_spark.operators.multimodal import (
     build_png,
     decode_png,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_ico", "parse_ico", "extract_ico_features",
            "ICO_FEATURES_SCHEMA"]
@@ -169,27 +168,4 @@ ICO_FEATURES_SCHEMA = (
 def extract_ico_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> parsed favicon rows, one Arrow pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_ico(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_images": pd.array(
-                        [r["n_images"] for r in rows], dtype="Int32"),
-                    "entries": [r["entries"] for r in rows],
-                    "best_width": pd.array(
-                        [r["best_width"] for r in rows], dtype="Int32"),
-                    "best_height": pd.array(
-                        [r["best_height"] for r in rows], dtype="Int32"),
-                    "best_kind": [r["best_kind"] for r in rows],
-                    "best_ink": pd.array(
-                        [r["best_ink"] for r in rows], dtype="Int64"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, ICO_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_ico, ICO_FEATURES_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ from __future__ import annotations
 
 import re
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_id3v2", "text_frame", "parse_id3v2",
            "extract_id3_features", "ID3_FEATURES_SCHEMA"]
@@ -165,6 +165,18 @@ def parse_id3v2(data: bytes | None) -> dict:
         return {**none, "error": str(e)}
 
 
+def _id3_row(b: bytes | None) -> dict:
+    """parse_id3v2's row with the classic text frames projected."""
+    r = parse_id3v2(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    f = r["fields"]
+    trck = f.get("TRCK")
+    return {**r, "title": f.get("TIT2"), "artist": f.get("TPE1"),
+            "album": f.get("TALB"),
+            "track": int(trck) if trck and trck.isdigit() else None}
+
+
 ID3_FEATURES_SCHEMA = (
     "doc_id long, n_frames int, n_text_frames int, title string, "
     "artist string, album string, track int, padding_bytes int, "
@@ -176,47 +188,4 @@ def extract_id3_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> tag rows projecting the classic fields
     (TIT2/TPE1/TALB/TRCK), one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for b in pdf[content_col]:
-                r = parse_id3v2(b)
-                if r["error"] is not None:
-                    rows.append({"n_frames": None, "n_text_frames": None,
-                                 "title": None, "artist": None,
-                                 "album": None, "track": None,
-                                 "padding_bytes": None,
-                                 "error": r["error"]})
-                    continue
-                f = r["fields"]
-                trck = f.get("TRCK")
-                rows.append({
-                    "n_frames": r["n_frames"],
-                    "n_text_frames": r["n_text_frames"],
-                    "title": f.get("TIT2"), "artist": f.get("TPE1"),
-                    "album": f.get("TALB"),
-                    "track": int(trck) if trck and trck.isdigit() else None,
-                    "padding_bytes": r["padding_bytes"], "error": None,
-                })
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_frames": pd.array(
-                        [r["n_frames"] for r in rows], dtype="Int32"),
-                    "n_text_frames": pd.array(
-                        [r["n_text_frames"] for r in rows], dtype="Int32"),
-                    "title": [r["title"] for r in rows],
-                    "artist": [r["artist"] for r in rows],
-                    "album": [r["album"] for r in rows],
-                    "track": pd.array(
-                        [r["track"] for r in rows], dtype="Int32"),
-                    "padding_bytes": pd.array(
-                        [r["padding_bytes"] for r in rows], dtype="Int32"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, ID3_FEATURES_SCHEMA
-    )
+    return map_blobs(df, _id3_row, ID3_FEATURES_SCHEMA, id_col, content_col)

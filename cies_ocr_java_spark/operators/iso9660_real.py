@@ -28,10 +28,10 @@ Reference parity: none — beyond-reference container operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs, rows_or_error
 
 SECTOR = 2048
 _MAX_DEPTH = 16
@@ -236,29 +236,10 @@ ISO_SCHEMA = (
     "error string"
 )
 
-_ISO_NONE = {"path": None, "is_dir": None, "size": None, "lba": None,
-             "content_md5": None, "volume_id": None,
-             "total_sectors": None}
-
 
 def extract_iso_entries(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per filesystem entry via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                rows, err = parse_iso(b)
-                if err is not None:
-                    out.append({"doc_id": int(i), **_ISO_NONE,
-                                "error": err})
-                else:
-                    for r in rows:
-                        out.append({"doc_id": int(i), **r,
-                                    "error": None})
-            yield pd.DataFrame(
-                out, columns=["doc_id", *list(_ISO_NONE), "error"])
-
-    return df.select(id_col, content_col).mapInPandas(op, ISO_SCHEMA)
+    return map_blobs(df, rows_or_error(parse_iso), ISO_SCHEMA, id_col,
+                     content_col)

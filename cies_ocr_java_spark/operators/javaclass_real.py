@@ -23,10 +23,10 @@ Reference parity: none — beyond-reference binary-artifact operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 MAGIC = 0xCAFEBABE
 
@@ -259,21 +259,4 @@ def extract_class_features(df: DataFrame,
                            id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> class metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_class(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("class_name", None), ("super_name", None),
-                ("major", "Int32"), ("n_pool", "Int32"),
-                ("n_wide", "Int32"), ("n_methods", "Int32"),
-                ("method_names", None), ("n_utf8", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, JAVACLASS_SCHEMA)
+    return map_blobs(df, parse_class, JAVACLASS_SCHEMA, id_col, content_col)

@@ -33,10 +33,10 @@ beyond-reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAGIC = b"\xac\xed\x00\x05"
 _BASE_HANDLE = 0x7E0000
@@ -316,18 +316,4 @@ _JS_SCHEMA = (
 def extract_javaser_features(df: DataFrame,
                              content_col: str = "content",
                              id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_javaser(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_objects", "n_classes", "n_strings",
-                      "n_refs", "max_fields"):
-                out[c] = out[c].astype("Int32")
-            out["int_sum"] = out["int_sum"].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _JS_SCHEMA)
+    return map_blobs(df, parse_javaser, _JS_SCHEMA, id_col, content_col)

@@ -32,13 +32,13 @@ Textract; this exceeds it — cited per repo rules: DocumentExtractManager
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from cies_ocr_java_spark.operators.multimodal import MediaCodec
+from cies_ocr_java_spark.operators.multimodal import MediaCodec, with_mime
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 # zigzag order: index k -> (row, col) in the 8x8 block
 _ZIGZAG: list[tuple[int, int]] = []
@@ -440,31 +440,8 @@ def extract_jpeg_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded width/height/ink rows via one
     Arrow-batched mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_jpeg(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "mime": ["image/jpeg" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, JPEG_FEATURES_SCHEMA
-    )
+    return map_blobs(df, with_mime(decode_jpeg, "image/jpeg"),
+                     JPEG_FEATURES_SCHEMA, id_col, content_col)
 
 
 # ---------------------------------------------------------------------
@@ -656,6 +633,11 @@ def _decode_exif_tiff(t: bytes) -> dict:
     return {**out, "error": None}
 
 
+def _exif_row(b: bytes | None) -> dict:
+    """decode_exif's row plus the pixel decoder's width."""
+    return {**decode_exif(b), "width": decode_jpeg(b)["width"]}
+
+
 EXIF_SCHEMA = (
     "doc_id long, orientation int, exif_datetime string, pixel_x int, "
     "pixel_y int, width int, error string"
@@ -667,32 +649,7 @@ def extract_exif_metadata(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> EXIF metadata rows + the pixel decoder's
     width as a cross-check that the APP1 splice leaves the image
     decodable. One Arrow-batched mapInPandas pass, no shuffle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_exif(b) for b in pdf[content_col]]
-            pix = [decode_jpeg(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "orientation": pd.array(
-                        [r["orientation"] for r in rows], dtype="Int32"
-                    ),
-                    "exif_datetime": [r["exif_datetime"] for r in rows],
-                    "pixel_x": pd.array(
-                        [r["pixel_x"] for r in rows], dtype="Int32"
-                    ),
-                    "pixel_y": pd.array(
-                        [r["pixel_y"] for r in rows], dtype="Int32"
-                    ),
-                    "width": pd.array(
-                        [p["width"] for p in pix], dtype="Int32"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, EXIF_SCHEMA)
+    return map_blobs(df, _exif_row, EXIF_SCHEMA, id_col, content_col)
 
 
 # register on import (multimodal's dispatch imports this module lazily)

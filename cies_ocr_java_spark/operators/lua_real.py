@@ -25,10 +25,10 @@ Reference parity: none — bytecode recovery is beyond-reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _SIG = b"\x1bLua"
 _LUAC_DATA = b"\x19\x93\r\n\x1a\n"
@@ -254,19 +254,4 @@ _LUA_SCHEMA = (
 def extract_lua_features(df: DataFrame,
                          content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_lua_chunk(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_functions", "n_instructions",
-                      "n_constants", "max_depth", "n_upvalues"):
-                out[c] = out[c].astype("Int32")
-            for c in ("int_const_sum", "str_const_bytes"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _LUA_SCHEMA)
+    return map_blobs(df, parse_lua_chunk, _LUA_SCHEMA, id_col, content_col)

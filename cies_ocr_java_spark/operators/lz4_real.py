@@ -29,10 +29,10 @@ checksum + declared content size. Error rows, never exceptions."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["xxh32", "lz4_compress_block", "lz4_decompress_block",
            "build_lz4_frame", "parse_lz4_frame", "extract_lz4_features",
@@ -318,6 +318,17 @@ def parse_lz4_frame(data: bytes | None) -> dict:
         return {**none, "error": str(e)}
 
 
+def _lz4_row(b: bytes | None) -> dict:
+    """parse_lz4_frame's row with the content decoded as UTF-8 text."""
+    r = parse_lz4_frame(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    try:
+        return {**r, "text": r["content"].decode("utf-8")}
+    except UnicodeDecodeError:
+        return {"error": "non-utf8 content"}
+
+
 LZ4_FEATURES_SCHEMA = (
     "doc_id long, text string, n_blocks int, content_size bigint, "
     "error string"
@@ -327,39 +338,4 @@ LZ4_FEATURES_SCHEMA = (
 def extract_lz4_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded frame rows, one Arrow pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for b in pdf[content_col]:
-                r = parse_lz4_frame(b)
-                if r["error"] is None:
-                    try:
-                        text = r["content"].decode("utf-8")
-                    except UnicodeDecodeError:
-                        rows.append({"text": None, "n_blocks": None,
-                                     "content_size": None,
-                                     "error": "non-utf8 content"})
-                        continue
-                    rows.append({"text": text, "n_blocks": r["n_blocks"],
-                                 "content_size": r["content_size"],
-                                 "error": None})
-                else:
-                    rows.append({"text": None, "n_blocks": None,
-                                 "content_size": None,
-                                 "error": r["error"]})
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "text": [r["text"] for r in rows],
-                    "n_blocks": pd.array(
-                        [r["n_blocks"] for r in rows], dtype="Int32"),
-                    "content_size": pd.array(
-                        [r["content_size"] for r in rows], dtype="Int64"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, LZ4_FEATURES_SCHEMA
-    )
+    return map_blobs(df, _lz4_row, LZ4_FEATURES_SCHEMA, id_col, content_col)

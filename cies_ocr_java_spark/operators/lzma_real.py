@@ -32,10 +32,9 @@ Reference parity: none — beyond-reference codec operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _K_TOP = 1 << 24
 _PROB_INIT = 1024  # 2048 / 2
@@ -344,19 +343,4 @@ def extract_lzma_docs(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded-stream stats via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_lzma_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_bytes", "Int64"), ("n_lines", "Int32"),
-                ("text_md5", None), ("lc", "Int32"), ("lp", "Int32"),
-                ("pb", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, LZMA_SCHEMA)
+    return map_blobs(df, parse_lzma_doc, LZMA_SCHEMA, id_col, content_col)

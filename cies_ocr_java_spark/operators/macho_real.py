@@ -27,12 +27,11 @@ Reference parity: none — beyond-reference binary-artifact operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.javaclass_real import parse_class
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 FAT_MAGIC = 0xCAFEBABE
 MH_MAGIC_64 = 0xFEEDFACF
@@ -188,21 +187,4 @@ def extract_cafebabe(df: DataFrame, content_col: str = "content",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> dispatched artifact metadata via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_cafebabe(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("format", None), ("n_archs", "Int32"),
-                ("cputypes", None), ("uuids", None),
-                ("n_cmds", "Int32"), ("dylibs", None),
-                ("class_name", None), ("class_major", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MACHO_SCHEMA)
+    return map_blobs(df, parse_cafebabe, MACHO_SCHEMA, id_col, content_col)

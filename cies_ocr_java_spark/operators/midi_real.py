@@ -27,10 +27,10 @@ Reference parity: none — beyond-reference media operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _ONE_BYTE_OPS = (0xC0, 0xD0)  # program change, channel pressure
 
@@ -188,21 +188,4 @@ def extract_midi_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> SMF facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_midi(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("format", "Int32"), ("n_tracks", "Int32"),
-                ("division", "Int32"), ("total_ticks", "Int64"),
-                ("n_note_on", "Int32"), ("n_note_off", "Int32"),
-                ("tempo_us", "Int32"), ("n_running", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MIDI_SCHEMA)
+    return map_blobs(df, parse_midi, MIDI_SCHEMA, id_col, content_col)

@@ -23,10 +23,9 @@ Reference parity: none — the reference hands media to Textract
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 # MPEG-1 Layer III bitrate table (kbps), indices 1..14; 0=free, 15=bad.
 MP3_KBPS = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320]
@@ -152,27 +151,4 @@ def extract_mp3_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> frame-walk metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_mp3(b) for b in pdf[content_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "n_frames": pd.array(
-                    [r["n_frames"] for r in rows], dtype="Int32"),
-                "sample_rate": pd.array(
-                    [r["sample_rate"] for r in rows], dtype="Int32"),
-                "duration_ms": pd.array(
-                    [r["duration_ms"] for r in rows], dtype="Int64"),
-                "audio_bytes": pd.array(
-                    [r["audio_bytes"] for r in rows], dtype="Int64"),
-                "id3v2_size": pd.array(
-                    [r["id3v2_size"] for r in rows], dtype="Int32"),
-                "has_id3v1": pd.array(
-                    [None if r["has_id3v1"] is None else int(r["has_id3v1"])
-                     for r in rows], dtype="Int32"),
-                "error": [r["error"] for r in rows],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MP3_FEATURES_SCHEMA)
+    return map_blobs(df, parse_mp3, MP3_FEATURES_SCHEMA, id_col, content_col)

@@ -39,6 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.multimodal import MediaCodec
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _U32 = struct.Struct(">I")
 _U64 = struct.Struct(">Q")
@@ -319,30 +320,7 @@ def extract_mp4_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> container metadata + verified sample sums
     via one Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_mp4(b) for b in pdf[content_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "brand": [r["brand"] for r in rows],
-                "duration_ms": pd.array(
-                    [r["duration_ms"] for r in rows], dtype="Int64"),
-                "n_tracks": pd.array(
-                    [r["n_tracks"] for r in rows], dtype="Int32"),
-                "n_samples": pd.array(
-                    [r["n_samples"] for r in rows], dtype="Int32"),
-                "width": pd.array(
-                    [r["width"] for r in rows], dtype="Int32"),
-                "height": pd.array(
-                    [r["height"] for r in rows], dtype="Int32"),
-                "payload_sum": pd.array(
-                    [r["payload_sum"] for r in rows], dtype="Int64"),
-                "error": [r["error"] for r in rows],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MP4_FEATURES_SCHEMA)
+    return map_blobs(df, parse_mp4, MP4_FEATURES_SCHEMA, id_col, content_col)
 
 
 def extract_mp4_samples(df: DataFrame, content_col: str = "content",
@@ -350,30 +328,8 @@ def extract_mp4_samples(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> one row per sample read back through
     stco+stsz — REAL frame sampling over a real container; one
     mapInPandas pass, no shuffle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "sample_idx": [], "offset": [],
-                   "size": [], "byte_sum": [], "error": []}
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                for r in iter_mp4_samples(b):
-                    out["doc_id"].append(int(i))
-                    out["sample_idx"].append(r["sample_idx"])
-                    out["offset"].append(r["offset"])
-                    out["size"].append(r["size"])
-                    out["byte_sum"].append(r["byte_sum"])
-                    out["error"].append(r["error"])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "sample_idx": pd.array(out["sample_idx"], dtype="Int32"),
-                "offset": pd.array(out["offset"], dtype="Int32"),
-                "size": pd.array(out["size"], dtype="Int32"),
-                "byte_sum": pd.array(out["byte_sum"], dtype="Int64"),
-                "error": out["error"],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MP4_SAMPLES_SCHEMA)
+    return map_blobs(df, iter_mp4_samples, MP4_SAMPLES_SCHEMA, id_col,
+                     content_col)
 
 
 # register on import (multimodal's dispatch imports this module lazily)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference serialization operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAX_DEPTH = 32
 
@@ -256,20 +256,5 @@ def extract_msgpack_docs(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded document fields via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_msgpack_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("rid", "Int64"), ("name", None), ("n_tags", "Int32"),
-                ("tags", None), ("ratio", "Float64"),
-                ("blob_len", "Int32"), ("ok", "Int32"),
-                ("neg", "Int32"), ("note", None), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, MSGPACK_SCHEMA)
+    return map_blobs(df, parse_msgpack_doc, MSGPACK_SCHEMA,
+                     id_col, content_col)

@@ -24,6 +24,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from cies_ocr_java_spark.operators.walker import map_blobs
+
 MEDIA_FEATURES_SCHEMA = (
     "media_ref string, n_bytes long, width int, height int, n_frames int, "
     "mime string, error string"
@@ -365,34 +367,21 @@ class PngCodec(MediaCodec):
         )
 
 
+def with_mime(decode, mime: str):
+    """Row function: ``decode``'s row plus ``mime`` when it decoded."""
+    def row(b: bytes | None) -> dict:
+        r = decode(b)
+        return {**r, "mime": mime if r["error"] is None else None}
+    return row
+
+
 def extract_png_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded width/height/ink rows via one
     Arrow-batched mapInPandas pass (shares BMP_FEATURES_SCHEMA — same
     feature shape, different codec)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_png(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "mime": ["image/png" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, BMP_FEATURES_SCHEMA)
+    return map_blobs(df, with_mime(decode_png, "image/png"),
+                     BMP_FEATURES_SCHEMA, id_col, content_col)
 
 
 _WAV_RIFF = struct.Struct("<4sI4s")      # 'RIFF', chunk size, 'WAVE'
@@ -501,30 +490,7 @@ def extract_wav_features(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> decoded PCM stats via one Arrow-batched
     mapInPandas pass (abs_sum needs the sample bytes, which the generic
     codec schema does not carry)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_wav(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "channels": pd.array(
-                        [r["channels"] for r in rows], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [r["sample_rate"] for r in rows], dtype="Int32"
-                    ),
-                    "n_samples": pd.array(
-                        [r["n_samples"] for r in rows], dtype="Int32"
-                    ),
-                    "abs_sum": pd.array(
-                        [r["abs_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, WAV_FEATURES_SCHEMA)
+    return map_blobs(df, decode_wav, WAV_FEATURES_SCHEMA, id_col, content_col)
 
 
 class BmpCodec(MediaCodec):
@@ -562,29 +528,8 @@ def extract_bmp_features(df: DataFrame, content_col: str = "content",
     """(id, content:binary) -> real decoded width/height/ink rows via one
     Arrow-batched mapInPandas pass (the ink statistic needs the pixel
     bytes, which the generic 5-column codec schema does not carry)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_bmp(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "mime": ["image/bmp" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, BMP_FEATURES_SCHEMA)
+    return map_blobs(df, with_mime(decode_bmp, "image/bmp"),
+                     BMP_FEATURES_SCHEMA, id_col, content_col)
 
 
 # --- GIF: the LZW-compressed, multi-frame image container ------------------
@@ -858,32 +803,8 @@ def extract_gif_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded width/height/frames/ink rows via
     one Arrow-batched mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_gif(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [r["n_frames"] for r in rows], dtype="Int32"
-                    ),
-                    "mime": ["image/gif" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, GIF_FEATURES_SCHEMA)
+    return map_blobs(df, with_mime(decode_gif, "image/gif"),
+                     GIF_FEATURES_SCHEMA, id_col, content_col)
 
 
 def sniff_media_format(data: bytes | None) -> str | None:
@@ -1562,34 +1483,8 @@ def extract_tiff_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded TIFF rows via one Arrow-batched
     mapInPandas pass (ink needs the strip bytes)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_tiff(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "n_pages": pd.array(
-                        [r["n_pages"] for r in rows], dtype="Int32"
-                    ),
-                    "mime": ["image/tiff" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, TIFF_FEATURES_SCHEMA
-    )
+    return map_blobs(df, with_mime(decode_tiff, "image/tiff"),
+                     TIFF_FEATURES_SCHEMA, id_col, content_col)
 
 
 register_codec(TiffCodec())
@@ -1749,35 +1644,8 @@ def extract_ico_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> per-container decode rows via one
     Arrow-batched mapInPandas pass, no shuffle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_ico(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_images": pd.array(
-                        [r["n_images"] for r in rows], dtype="Int32"
-                    ),
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "fmt0": [r["fmt0"] for r in rows],
-                    "mime": ["image/x-icon" if o else None for o in ok],
-                    "ink_sum": pd.array(
-                        [r["ink_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, ICO_FEATURES_SCHEMA
-    )
+    return map_blobs(df, with_mime(decode_ico, "image/x-icon"),
+                     ICO_FEATURES_SCHEMA, id_col, content_col)
 
 
 register_codec(IcoCodec())
@@ -1931,34 +1799,8 @@ def extract_aiff_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded audio rows via one Arrow-batched
     mapInPandas pass, no shuffle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_aiff(b) for b in pdf[content_col]]
-            ok = [r["error"] is None for r in rows]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "channels": pd.array(
-                        [r["channels"] for r in rows], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [r["sample_rate"] for r in rows], dtype="Int32"
-                    ),
-                    "n_samples": pd.array(
-                        [r["n_samples"] for r in rows], dtype="Int32"
-                    ),
-                    "abs_sum": pd.array(
-                        [r["abs_sum"] for r in rows], dtype="Int64"
-                    ),
-                    "mime": ["audio/aiff" if o else None for o in ok],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, AIFF_FEATURES_SCHEMA
-    )
+    return map_blobs(df, with_mime(decode_aiff, "audio/aiff"),
+                     AIFF_FEATURES_SCHEMA, id_col, content_col)
 
 
 register_codec(AiffCodec())

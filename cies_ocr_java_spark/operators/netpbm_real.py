@@ -21,10 +21,9 @@ Reference parity: none — beyond-reference media operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def build_ppm(width: int, height: int, pixel_fn, gray: bool = False,
@@ -132,19 +131,4 @@ def extract_ppm_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_ppm(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("kind", None), ("width", "Int32"),
-                ("height", "Int32"), ("maxval", "Int32"),
-                ("n_comments", "Int32"), ("sample_sum", "Int64"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, PPM_SCHEMA)
+    return map_blobs(df, decode_ppm, PPM_SCHEMA, id_col, content_col)

@@ -30,12 +30,11 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import walk_zip_members
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAGIC = b"\x93NUMPY"
 _ITEM = {"<i8": 8, "<i4": 4, "<f8": 8, "|u1": 1}
@@ -200,17 +199,4 @@ _NPZ_SCHEMA = (
 
 def extract_npz_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_npz(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_arrays", "n_f8", "n_fortran", "max_rank"):
-                out[c] = out[c].astype("Int32")
-            for c in ("n_values", "vsum_x256"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _NPZ_SCHEMA)
+    return map_blobs(df, parse_npz, _NPZ_SCHEMA, id_col, content_col)

@@ -24,11 +24,10 @@ one (cells x glyphs) Hamming-distance matrix multiply per image.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 GLYPH_W, GLYPH_H, GLYPH_PITCH = 5, 7, 6  # 5px glyph + 1px gap
 
@@ -188,22 +187,4 @@ def extract_ocr_glyph(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary PNG) -> recognized text rows via one
     Arrow-batched mapInPandas pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [ocr_png(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "text": [r["text"] for r in rows],
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"
-                    ),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"
-                    ),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, OCR_GLYPH_SCHEMA)
+    return map_blobs(df, ocr_png, OCR_GLYPH_SCHEMA, id_col, content_col)

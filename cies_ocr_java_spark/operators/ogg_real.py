@@ -27,10 +27,10 @@ strings — the degradation contract all container walkers share)."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_ogg", "parse_ogg", "extract_ogg_features",
            "OGG_FEATURES_SCHEMA", "LACING_PER_PAGE"]
@@ -204,26 +204,4 @@ OGG_FEATURES_SCHEMA = (
 def extract_ogg_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> walked ogg rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_ogg(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_pages": pd.array(
-                        [r["n_pages"] for r in rows], dtype="Int32"),
-                    "n_packets": pd.array(
-                        [r["n_packets"] for r in rows], dtype="Int32"),
-                    "serial": pd.array(
-                        [r["serial"] for r in rows], dtype="Int64"),
-                    "granule": pd.array(
-                        [r["granule"] for r in rows], dtype="Int64"),
-                    "text": [r["text"] for r in rows],
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, OGG_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_ogg, OGG_FEATURES_SCHEMA, id_col, content_col)

@@ -28,10 +28,9 @@ Textract; container-level structure recovery is beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAGIC = bytes.fromhex("d0cf11e0a1b11ae1")
 _FREE = 0xFFFFFFFF
@@ -400,18 +399,4 @@ _CFB_SCHEMA = (
 
 def extract_cfb_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_cfb(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_storages", "n_streams", "n_mini",
-                      "max_depth"):
-                out[c] = out[c].astype("Int32")
-            for c in ("stream_bytes", "content_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _CFB_SCHEMA)
+    return map_blobs(df, parse_cfb, _CFB_SCHEMA, id_col, content_col)

@@ -29,12 +29,10 @@ Reference parity: none — beyond-reference columnar-storage operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.proto_wire import _decode_varint
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _KINDS = {0: "boolean", 1: "byte", 2: "short", 3: "int", 4: "long",
           5: "float", 6: "double", 7: "string", 8: "binary",
@@ -198,18 +196,4 @@ _ORC_SCHEMA = (
 
 def extract_orc_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_orc_meta(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_stripes", "n_cols"):
-                out[c] = out[c].astype("Int32")
-            for c in ("n_rows", "val_min", "val_max", "val_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _ORC_SCHEMA)
+    return map_blobs(df, parse_orc_meta, _ORC_SCHEMA, id_col, content_col)

@@ -22,9 +22,7 @@ Reference parity: none — beyond-reference columnar-storage operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.parquet_footer import (
@@ -32,6 +30,7 @@ from cies_ocr_java_spark.operators.parquet_footer import (
     _Reader,
     parse_parquet_footer,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def build_parquet_plain(n_rows: int, val_step: int,
@@ -153,22 +152,7 @@ def extract_parquet_values(df: DataFrame,
                            id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded column facts via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_parquet_values(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_row_groups", "Int32"), ("n_pages", "Int32"),
-                ("total_values", "Int64"), ("values_sum", "Int64"),
-                ("min_val", "Int64"), ("max_val", "Int64"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, PP_SCHEMA)
+    return map_blobs(df, parse_parquet_values, PP_SCHEMA, id_col, content_col)
 
 
 # ---------------------------------------------------------------------------
@@ -353,22 +337,8 @@ _PD_SCHEMA = (
 def extract_parquet_dict_values(df: DataFrame,
                                 content_col: str = "content",
                                 id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_parquet_dict_values(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_row_groups", "n_pages", "dict_entries"):
-                out[c] = out[c].astype("Int32")
-            for c in ("total_values", "n_nulls", "values_sum",
-                      "min_val", "max_val"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _PD_SCHEMA)
+    return map_blobs(df, parse_parquet_dict_values, _PD_SCHEMA,
+                     id_col, content_col)
 
 
 def build_parquet_delta(values: list[int],
@@ -542,21 +512,5 @@ def extract_parquet_delta_values(df: DataFrame,
     schema = ("doc_id long, n_row_groups int, n_pages int, "
               "total_values bigint, values_sum bigint, "
               "min_val bigint, max_val bigint, error string")
-
-    def op(batches: Iterator[pd.DataFrame]
-           ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_parquet_delta_values(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_row_groups", "n_pages"):
-                out[c] = out[c].astype("Int32")
-            for c in ("total_values", "values_sum", "min_val",
-                      "max_val"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, schema)
+    return map_blobs(df, parse_parquet_delta_values, schema,
+                     id_col, content_col)

@@ -34,10 +34,10 @@ operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs, rows_or_error
 
 PCAP_MAGIC = 0xA1B2C3D4
 LINKTYPE_ETHERNET = 1
@@ -246,32 +246,11 @@ PCAP_PACKETS_SCHEMA = (
     "flags int, payload binary, ip_ok int, tcp_ok int, error string"
 )
 
-_PKT_NONE = {
-    "pkt_idx": None, "ts_us": None, "src_ip": None, "dst_ip": None,
-    "src_port": None, "dst_port": None, "seq": None, "ack": None,
-    "flags": None, "payload": None, "ip_ok": None, "tcp_ok": None,
-}
-
 
 def extract_pcap_packets(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> one row per captured packet via one
     Arrow-batched mapInPandas pass (no shuffle); malformed captures
     degrade to a single error row per document."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, b in zip(pdf[id_col], pdf[content_col]):
-                rows, err = parse_pcap(b)
-                if err is not None:
-                    out.append({"doc_id": int(i), **_PKT_NONE,
-                                "error": err})
-                else:
-                    for r in rows:
-                        out.append({"doc_id": int(i), **r, "error": None})
-            yield pd.DataFrame(
-                out, columns=["doc_id", *list(_PKT_NONE), "error"])
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, PCAP_PACKETS_SCHEMA)
+    return map_blobs(df, rows_or_error(parse_pcap), PCAP_PACKETS_SCHEMA,
+                     id_col, content_col)

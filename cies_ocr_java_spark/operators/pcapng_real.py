@@ -22,10 +22,9 @@ Reference parity: none — wire-capture recovery is beyond-reference
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _SHB = 0x0A0D0D0A
 _IDB = 0x00000001
@@ -197,19 +196,4 @@ _PNG_SCHEMA = (
 def extract_pcapng_features(df: DataFrame,
                             content_col: str = "content",
                             id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_pcapng(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_interfaces", "n_packets", "n_options",
-                      "big_endian"):
-                out[c] = out[c].astype("Int32")
-            for c in ("pkt_bytes", "orig_bytes"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _PNG_SCHEMA)
+    return map_blobs(df, parse_pcapng, _PNG_SCHEMA, id_col, content_col)

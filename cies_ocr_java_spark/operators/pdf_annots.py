@@ -31,9 +31,7 @@ link recovery is beyond-reference)."""
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.pdf_real import (
@@ -47,6 +45,7 @@ from cies_ocr_java_spark.operators.pdf_real import (
     _ref,
     _unescape_literal,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_pdf_links", "parse_pdf_links", "extract_pdf_links",
            "PDF_LINKS_SCHEMA"]
@@ -254,6 +253,15 @@ def parse_pdf_links(data: bytes | None) -> dict:
         return {"links": None, "error": str(e)}
 
 
+def _link_rows(b: bytes | None) -> dict | list[dict]:
+    """parse_pdf_links' links as PDF_LINKS_SCHEMA rows."""
+    r = parse_pdf_links(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    return [dict(zip(("page_idx", "link_idx", "kind", "target", "anchor"),
+                     link)) for link in r["links"]]
+
+
 PDF_LINKS_SCHEMA = (
     "doc_id long, page_idx int, link_idx int, kind string, target string, "
     "anchor string, error string"
@@ -264,38 +272,4 @@ def extract_pdf_links(df: DataFrame, payload_col: str = "payload",
                       id_col: str = "doc_id") -> DataFrame:
     """(id, payload:binary) -> one row per link (or one error row per
     failed doc), one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "page_idx", "link_idx",
-                                   "kind", "target", "anchor", "error")}
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                r = parse_pdf_links(payload)
-                if r["error"] is not None:
-                    out["doc_id"].append(int(did))
-                    for k in ("page_idx", "link_idx", "kind", "target",
-                              "anchor"):
-                        out[k].append(None)
-                    out["error"].append(r["error"])
-                    continue
-                for pidx, lidx, kind, target, anchor in r["links"]:
-                    out["doc_id"].append(int(did))
-                    out["page_idx"].append(pidx)
-                    out["link_idx"].append(lidx)
-                    out["kind"].append(kind)
-                    out["target"].append(target)
-                    out["anchor"].append(anchor)
-                    out["error"].append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                    "page_idx": pd.array(out["page_idx"], dtype="Int32"),
-                    "link_idx": pd.array(out["link_idx"], dtype="Int32"),
-                    "kind": out["kind"],
-                    "target": out["target"],
-                    "anchor": out["anchor"],
-                    "error": out["error"],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(op, PDF_LINKS_SCHEMA)
+    return map_blobs(df, _link_rows, PDF_LINKS_SCHEMA, id_col, payload_col)

@@ -38,9 +38,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.pdf_real import (
@@ -54,6 +52,7 @@ from cies_ocr_java_spark.operators.pdf_real import (
     _stream_bytes,
     _unescape_literal,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_pdf_cid", "parse_pdf_cid", "extract_pdf_cid",
            "PDF_CID_SCHEMA"]
@@ -357,24 +356,4 @@ PDF_CID_SCHEMA = (
 def extract_pdf_cid(df: DataFrame, payload_col: str = "payload",
                     id_col: str = "doc_id") -> DataFrame:
     """(id, payload:binary) -> decoded CID rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_pdf_cid(b) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "text": [r["text"] for r in rows],
-                    "n_fonts": pd.array(
-                        [r["n_fonts"] for r in rows], dtype="Int32"),
-                    "n_codes": pd.array(
-                        [r["n_codes"] for r in rows], dtype="Int32"),
-                    "n_unmapped": pd.array(
-                        [r["n_unmapped"] for r in rows], dtype="Int32"),
-                    "page_count": pd.array(
-                        [r["page_count"] for r in rows], dtype="Int32"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(op, PDF_CID_SCHEMA)
+    return map_blobs(df, parse_pdf_cid, PDF_CID_SCHEMA, id_col, payload_col)

@@ -33,9 +33,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.pdf_real import (
@@ -46,6 +44,7 @@ from cies_ocr_java_spark.operators.pdf_real import (
     _ref,
     _unescape_literal,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_pdf_form", "parse_pdf_form", "extract_pdf_form_fields"]
 
@@ -305,6 +304,15 @@ def parse_pdf_form(data: bytes | None) -> dict:
         return {"fields": None, "error": str(e)}
 
 
+def _form_rows(b: bytes | None) -> dict | list[dict]:
+    """parse_pdf_form's leaf fields as PDF_FORM_SCHEMA rows."""
+    r = parse_pdf_form(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    return [dict(zip(("field_idx", "name", "ftype", "value"), f))
+            for f in r["fields"]]
+
+
 PDF_FORM_SCHEMA = ("doc_id long, field_idx int, name string, "
                    "ftype string, value string, error string")
 
@@ -314,23 +322,4 @@ def extract_pdf_form_fields(df: DataFrame, payload_col: str = "payload",
     """(id, payload) -> one row per leaf field in depth-first order, or
     ONE error row per malformed document. Arrow-batched mapInPandas,
     no shuffle."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
-                r = parse_pdf_form(None if p is None else bytes(p))
-                if r["error"] is not None:
-                    rows.append((int(did), None, None, None, None,
-                                 r["error"]))
-                    continue
-                for idx, name, ft, val in r["fields"]:
-                    rows.append((int(did), idx, name, ft, val, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "field_idx", "name", "ftype",
-                         "value", "error"],
-            ).astype({"doc_id": "int64", "field_idx": "Int32"})
-
-    return df.select(id_col, payload_col).mapInPandas(
-        op, PDF_FORM_SCHEMA)
+    return map_blobs(df, _form_rows, PDF_FORM_SCHEMA, id_col, payload_col)

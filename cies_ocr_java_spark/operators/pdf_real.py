@@ -48,6 +48,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from cies_ocr_java_spark.operators.walker import map_blobs
+
 PAGE_CHUNK_CHARS = 200  # writer: one page object per 200 input chars
 
 
@@ -1488,13 +1490,9 @@ def parse_pdf_positioned(data: bytes) -> dict:
 # expression form, so this is the documented irreducible-Python case)
 # ---------------------------------------------------------------------------
 
-REAL_PDF_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("page_count", T.IntegerType()),
-    T.StructField("n_objects", T.IntegerType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
+REAL_PDF_SCHEMA = (
+    "doc_id long, page_count int, n_objects int, text string, error string"
+)
 
 
 def real_pdf_bytes(df: DataFrame, text_col: str = "text",
@@ -1533,23 +1531,7 @@ def real_pdf_bytes(df: DataFrame, text_col: str = "text",
 def extract_real_pdf(df: DataFrame, payload_col: str = "payload",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, payload binary) -> REAL_PDF_SCHEMA via the structural parser."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_real_pdf(p) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "page_count": pd.array(
-                    [r["page_count"] for r in rows], dtype="Int32"
-                ),
-                "n_objects": pd.array(
-                    [r["n_objects"] for r in rows], dtype="Int32"
-                ),
-                "text": [r["text"] for r in rows],
-                "error": [r["error"] for r in rows],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(gen, REAL_PDF_SCHEMA)
+    return map_blobs(df, parse_real_pdf, REAL_PDF_SCHEMA, id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1657,7 +1639,8 @@ def parse_pdf_interleaved(data: bytes, keep_samples: bool = False) -> dict:
         crypt = _make_decryptor(data, offsets, trailer)
         root = _ref(trailer, b"Root")
         catalog, _ = _load_object(data, offsets, root, crypt=crypt)
-        pages_obj, _ = _load_object(data, offsets, _ref(catalog, b"Pages"))
+        pages_obj, _ = _load_object(data, offsets, _ref(catalog, b"Pages"),
+                                    crypt=crypt)
         kids = re.search(rb"/Kids\s*\[([^\]]*)\]", pages_obj)
         if not kids:
             raise _PdfError("pages tree missing /Kids")
@@ -1669,7 +1652,7 @@ def parse_pdf_interleaved(data: bytes, keep_samples: bool = False) -> dict:
         spans: list[dict] = []
         inline_idx = 0
         for kn in kid_nums:
-            page, _ = _load_object(data, offsets, kn)
+            page, _ = _load_object(data, offsets, kn, crypt=crypt)
             xob = re.search(rb"/XObject\s*<<(.*?)>>", page, re.S)
             res = {}
             if xob:
@@ -1790,18 +1773,26 @@ def _stream_bytes_rawfilter(data: bytes, obj_dict: bytes,
     return data[start:end]
 
 
-PDF_MEDIA_SPANS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("span_order", T.IntegerType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("media_w", T.IntegerType()),
-    T.StructField("media_h", T.IntegerType()),
-    T.StructField("media_ink", T.LongType()),
-    T.StructField("error", T.StringType()),
-])
+PDF_MEDIA_SPANS_SCHEMA = (
+    "doc_id long, span_order int, kind string, text string, "
+    "media_ref string, codec string, media_w int, media_h int, "
+    "media_ink bigint, error string"
+)
+
+
+def _media_span_rows(b: bytes | None) -> dict | list[dict]:
+    """parse_pdf_interleaved's spans as PDF_MEDIA_SPANS_SCHEMA rows."""
+    r = parse_pdf_interleaved(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    return [
+        {"span_order": k, "kind": "text", "text": s["text"]}
+        if s["kind"] == "text" else
+        {"span_order": k, "kind": "media", "media_ref": s["media_ref"],
+         "codec": s["codec"], "media_w": s["width"],
+         "media_h": s["height"], "media_ink": s["ink_sum"]}
+        for k, s in enumerate(r["spans"])
+    ]
 
 
 def extract_pdf_media_spans(df: DataFrame, payload_col: str = "payload",
@@ -1810,65 +1801,39 @@ def extract_pdf_media_spans(df: DataFrame, payload_col: str = "payload",
     carry text, media rows carry ref/codec/dims/decoded ink); a failed
     document is ONE null-span row with the error. Arrow-batched
     mapInPandas, no shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PDF_MEDIA_SPANS_SCHEMA.fields}
-
-            def push(did, order, kind, text=None, ref=None, codec=None,
-                     w=None, h=None, ink=None, err=None):
-                out["doc_id"].append(did)
-                out["span_order"].append(order)
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["media_ref"].append(ref)
-                out["codec"].append(codec)
-                out["media_w"].append(w)
-                out["media_h"].append(h)
-                out["media_ink"].append(ink)
-                out["error"].append(err)
-
-            for did, payload in zip(
-                pdf[id_col].astype("int64"), pdf[payload_col]
-            ):
-                r = parse_pdf_interleaved(payload)
-                if r["error"] is not None:
-                    push(did, None, None, err=r["error"])
-                    continue
-                for k, s in enumerate(r["spans"]):
-                    if s["kind"] == "text":
-                        push(did, k, "text", text=s["text"])
-                    else:
-                        push(did, k, "media", ref=s["media_ref"],
-                             codec=s["codec"], w=s["width"],
-                             h=s["height"], ink=s["ink_sum"])
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "span_order": pd.array(out["span_order"], dtype="Int32"),
-                "kind": out["kind"],
-                "text": out["text"],
-                "media_ref": out["media_ref"],
-                "codec": out["codec"],
-                "media_w": pd.array(out["media_w"], dtype="Int32"),
-                "media_h": pd.array(out["media_h"], dtype="Int32"),
-                "media_ink": pd.array(out["media_ink"], dtype="Int64"),
-                "error": out["error"],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, PDF_MEDIA_SPANS_SCHEMA
-    )
+    return map_blobs(df, _media_span_rows, PDF_MEDIA_SPANS_SCHEMA, id_col,
+                     payload_col)
 
 
-PDF_OCR_SPANS_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("span_order", T.IntegerType()),
-    T.StructField("kind", T.StringType()),
-    T.StructField("text", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("ocr_text", T.StringType()),
-    T.StructField("error", T.StringType()),
-])
+PDF_OCR_SPANS_SCHEMA = (
+    "doc_id long, span_order int, kind string, text string, "
+    "media_ref string, ocr_text string, error string"
+)
+
+
+def _ocr_span_rows(b: bytes | None) -> dict | list[dict]:
+    """parse_pdf_interleaved's spans as PDF_OCR_SPANS_SCHEMA rows, each
+    7px-tall media span OCR'd from its own samples."""
+    import numpy as np
+
+    from cies_ocr_java_spark.operators.ocr_glyph import GLYPH_H, ocr_pixels
+
+    r = parse_pdf_interleaved(b, keep_samples=True)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    rows = []
+    for k, s in enumerate(r["spans"]):
+        if s["kind"] == "text":
+            rows.append({"span_order": k, "kind": "text", "text": s["text"]})
+            continue
+        ocr = None
+        if s.get("samples") is not None and s["height"] == GLYPH_H:
+            px = np.frombuffer(s["samples"], dtype=np.uint8).reshape(
+                s["height"], s["width"])
+            ocr = ocr_pixels(px)
+        rows.append({"span_order": k, "kind": "media",
+                     "media_ref": s["media_ref"], "ocr_text": ocr})
+    return rows
 
 
 def extract_pdf_ocr_spans(df: DataFrame, payload_col: str = "payload",
@@ -1882,58 +1847,8 @@ def extract_pdf_ocr_spans(df: DataFrame, payload_col: str = "payload",
     the document reassembles from both modalities in reading order, the
     way DocumentExtractManager.java:463-599 assembles PDFBox text with
     Textract blocks. One Arrow-batched pass."""
-    import numpy as np
-
-    from cies_ocr_java_spark.operators.ocr_glyph import GLYPH_H, ocr_pixels
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k.name: [] for k in PDF_OCR_SPANS_SCHEMA.fields}
-
-            def push(did, order, kind, text=None, ref=None, ocr=None,
-                     err=None):
-                out["doc_id"].append(did)
-                out["span_order"].append(order)
-                out["kind"].append(kind)
-                out["text"].append(text)
-                out["media_ref"].append(ref)
-                out["ocr_text"].append(ocr)
-                out["error"].append(err)
-
-            for did, payload in zip(
-                pdf[id_col].astype("int64"), pdf[payload_col]
-            ):
-                r = parse_pdf_interleaved(payload, keep_samples=True)
-                if r["error"] is not None:
-                    push(did, None, None, err=r["error"])
-                    continue
-                for k, s in enumerate(r["spans"]):
-                    if s["kind"] == "text":
-                        push(did, k, "text", text=s["text"])
-                        continue
-                    ocr = None
-                    if (
-                        s.get("samples") is not None
-                        and s["height"] == GLYPH_H
-                    ):
-                        px = np.frombuffer(
-                            s["samples"], dtype=np.uint8
-                        ).reshape(s["height"], s["width"])
-                        ocr = ocr_pixels(px)
-                    push(did, k, "media", ref=s["media_ref"], ocr=ocr)
-            yield pd.DataFrame({
-                "doc_id": pd.array(out["doc_id"], dtype="int64"),
-                "span_order": pd.array(out["span_order"], dtype="Int32"),
-                "kind": out["kind"],
-                "text": out["text"],
-                "media_ref": out["media_ref"],
-                "ocr_text": out["ocr_text"],
-                "error": out["error"],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, PDF_OCR_SPANS_SCHEMA
-    )
+    return map_blobs(df, _ocr_span_rows, PDF_OCR_SPANS_SCHEMA, id_col,
+                     payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2653,6 +2568,14 @@ def extract_annotations(data: bytes) -> dict:
         return {"annots": None, "error": str(e)}
 
 
+def _annot_rows(b: bytes | None) -> dict | list[dict]:
+    """extract_annotations' annots as PDF_ANNOTS_SCHEMA rows."""
+    r = extract_annotations(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    return [{**a, "annot_idx": i} for i, a in enumerate(r["annots"])]
+
+
 PDF_ANNOTS_SCHEMA = (
     "doc_id long, annot_idx int, page_idx int, kind string, "
     "target string, x0 double, y0 double, x1 double, y1 double, "
@@ -2665,30 +2588,7 @@ def extract_pdf_annots(df: DataFrame, payload_col: str = "payload",
     """(id, payload) -> one row per annotation in (page, /Annots-array)
     order, or ONE error row per malformed document. Arrow-batched
     mapInPandas, no shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
-                r = extract_annotations(p)
-                if r["error"] is not None:
-                    rows.append((int(did), None, None, None, None,
-                                 None, None, None, None, r["error"]))
-                    continue
-                for i, a in enumerate(r["annots"]):
-                    rows.append((int(did), i, a["page_idx"], a["kind"],
-                                 a["target"], a["x0"], a["y0"], a["x1"],
-                                 a["y1"], None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "annot_idx", "page_idx", "kind",
-                         "target", "x0", "y0", "x1", "y1", "error"],
-            ).astype({"doc_id": "int64", "annot_idx": "Int32",
-                      "page_idx": "Int32"})
-
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, PDF_ANNOTS_SCHEMA
-    )
+    return map_blobs(df, _annot_rows, PDF_ANNOTS_SCHEMA, id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2794,6 +2694,16 @@ def parse_pdf_inline_images(data: bytes) -> dict:
         return {"images": None, "error": str(e)}
 
 
+def _inline_rows(b: bytes | None) -> dict | list[dict]:
+    """parse_pdf_inline_images' images as PDF_INLINE_SCHEMA rows."""
+    r = parse_pdf_inline_images(b)
+    if r["error"] is not None:
+        return {"error": r["error"]}
+    return [{"img_idx": i, **dict(zip(("page_idx", "x", "y", "w", "h",
+                                       "ink_sum"), im))}
+            for i, im in enumerate(r["images"])]
+
+
 PDF_INLINE_SCHEMA = (
     "doc_id long, img_idx int, page_idx int, x double, y double, "
     "w int, h int, ink_sum bigint, error string"
@@ -2805,26 +2715,4 @@ def extract_pdf_inline_images(df: DataFrame, payload_col: str = "payload",
     """(id, payload) -> one row per inline image in stream order, or ONE
     error row per malformed document. Arrow-batched mapInPandas, no
     shuffle."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, p in zip(pdf[id_col], pdf[payload_col]):
-                r = parse_pdf_inline_images(p)
-                if r["error"] is not None:
-                    rows.append((int(did), None, None, None, None,
-                                 None, None, None, r["error"]))
-                    continue
-                for i, (pno, x, y, w, h, ink) in enumerate(r["images"]):
-                    rows.append((int(did), i, pno, x, y, w, h, ink, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "img_idx", "page_idx", "x", "y",
-                         "w", "h", "ink_sum", "error"],
-            ).astype({"doc_id": "int64", "img_idx": "Int32",
-                      "page_idx": "Int32", "w": "Int32", "h": "Int32",
-                      "ink_sum": "Int64"})
-
-    return df.select(id_col, payload_col).mapInPandas(
-        gen, PDF_INLINE_SCHEMA
-    )
+    return map_blobs(df, _inline_rows, PDF_INLINE_SCHEMA, id_col, payload_col)

@@ -23,10 +23,10 @@ Reference parity: none — beyond-reference binary-artifact operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MACHINES = {0x8664: "x86_64", 0xAA64: "arm64"}
 _SUBSYSTEMS = {2: "gui", 3: "console"}
@@ -203,20 +203,4 @@ def extract_pe_features(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> executable metadata via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_pe(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("machine", None), ("subsystem", None),
-                ("timestamp", "Int64"), ("n_sections", "Int32"),
-                ("section_names", None), ("dll_name", None),
-                ("n_exports", "Int32"), ("export_names", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, PE_SCHEMA)
+    return map_blobs(df, parse_pe, PE_SCHEMA, id_col, content_col)

@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 _PASSES = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
@@ -235,18 +235,4 @@ _A7_SCHEMA = (
 def extract_adam7_features(df: DataFrame,
                            content_col: str = "content",
                            id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_png_adam7(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_passes"):
-                out[c] = out[c].astype("Int32")
-            for c in ("ink_sum", "row0_sum", "col0_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _A7_SCHEMA)
+    return map_blobs(df, parse_png_adam7, _A7_SCHEMA, id_col, content_col)

@@ -26,12 +26,11 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.multimodal import _PNG_SIG, build_png
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_png_meta", "parse_png_meta", "extract_png_meta",
            "PNG_META_SCHEMA"]
@@ -201,27 +200,4 @@ PNG_META_SCHEMA = (
 def extract_png_meta(df: DataFrame, content_col: str = "content",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> metadata rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_png_meta(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "n_chunks": pd.array(
-                        [r["n_chunks"] for r in rows], dtype="Int32"),
-                    "n_text": pd.array(
-                        [r["n_text"] for r in rows], dtype="Int32"),
-                    "kv": [r["kv"] for r in rows],
-                    "lang": [r["lang"] for r in rows],
-                    "phys_x": pd.array(
-                        [r["phys_x"] for r in rows], dtype="Int64"),
-                    "phys_y": pd.array(
-                        [r["phys_y"] for r in rows], dtype="Int64"),
-                    "phys_unit": pd.array(
-                        [r["phys_unit"] for r in rows], dtype="Int32"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(op, PNG_META_SCHEMA)
+    return map_blobs(df, parse_png_meta, PNG_META_SCHEMA, id_col, content_col)

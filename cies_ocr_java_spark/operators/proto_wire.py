@@ -27,10 +27,9 @@ numbers >= 9 in fixtures."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAX_VARINT_BYTES = 10
 
@@ -180,25 +179,8 @@ def extract_proto_docs(df: DataFrame, content_col: str = "content",
                        id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded Doc rows via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_proto_doc(b) for b in pdf[content_col]]
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "f_id": pd.array([r["f_id"] for r in rows], dtype="Int64"),
-                "name": [r["name"] for r in rows],
-                "big": pd.array([r["big"] for r in rows], dtype="Int64"),
-                "inner_n": pd.array(
-                    [r["inner_n"] for r in rows], dtype="Int64"),
-                "inner_s": [r["inner_s"] for r in rows],
-                "n_unknown": pd.array(
-                    [r["n_unknown"] for r in rows], dtype="Int32"),
-                "error": [r["error"] for r in rows],
-            })
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, PROTO_DOC_SCHEMA)
+    return map_blobs(df, parse_proto_doc, PROTO_DOC_SCHEMA,
+                     id_col, content_col)
 
 
 # --- groups (wire types 3/4) + packed repeated fields -----------------
@@ -324,21 +306,4 @@ def extract_proto_group_features(df: DataFrame,
               "max_group_depth int, int_sum bigint, "
               "n_packed_values int, packed_sum bigint, "
               "error string")
-
-    def op(batches: Iterator[pd.DataFrame]
-           ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_proto_groups(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_fields", "n_groups", "max_group_depth",
-                      "n_packed_values"):
-                out[c] = out[c].astype("Int32")
-            for c in ("int_sum", "packed_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, schema)
+    return map_blobs(df, parse_proto_groups, schema, id_col, content_col)

@@ -27,10 +27,9 @@ beyond-reference (media is Textract's problem in the reference).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def packbits_encode(row: bytes) -> bytes:
@@ -309,18 +308,4 @@ _PSD_SCHEMA = (
 
 def extract_psd_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_psd(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_layers", "alpha_merge",
-                      "max_channels"):
-                out[c] = out[c].astype("Int32")
-            for c in ("layer_px", "content_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _PSD_SCHEMA)
+    return map_blobs(df, parse_psd, _PSD_SCHEMA, id_col, content_col)

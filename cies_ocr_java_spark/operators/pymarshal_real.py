@@ -33,10 +33,10 @@ beyond-reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _FLAG_REF = 0x80
 
@@ -206,19 +206,4 @@ _PM_SCHEMA = (
 def extract_marshal_features(df: DataFrame,
                              content_col: str = "content",
                              id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_marshal(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_values", "n_ints", "n_strings",
-                      "n_containers", "n_refs", "max_depth"):
-                out[c] = out[c].astype("Int32")
-            for c in ("int_sum", "str_chars"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _PM_SCHEMA)
+    return map_blobs(df, parse_marshal, _PM_SCHEMA, id_col, content_col)

@@ -27,10 +27,9 @@ codec-layer structure recovery is beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _MAGIC = b"qoif"
 _END = b"\x00" * 7 + b"\x01"
@@ -215,16 +214,4 @@ _QOI_SCHEMA = (
 
 def extract_qoi_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_qoi(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "channels", "n_ops"):
-                out[c] = out[c].astype("Int32")
-            out["px_sum"] = out["px_sum"].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _QOI_SCHEMA)
+    return map_blobs(df, parse_qoi, _QOI_SCHEMA, id_col, content_col)

@@ -27,10 +27,10 @@ beyond-reference.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _HBIN_AT = 4096
 
@@ -302,18 +302,4 @@ _REGF_SCHEMA = (
 def extract_regf_features(df: DataFrame,
                           content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_regf(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_keys", "n_values", "inline_values",
-                      "torn"):
-                out[c] = out[c].astype("Int32")
-            for c in ("data_bytes", "dword_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _REGF_SCHEMA)
+    return map_blobs(df, parse_regf, _REGF_SCHEMA, id_col, content_col)

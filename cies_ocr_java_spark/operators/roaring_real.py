@@ -25,10 +25,10 @@ operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 COOKIE_NO_RUN = 12347
 _ARRAY_MAX = 4096
@@ -159,19 +159,4 @@ def extract_roaring(df: DataFrame, content_col: str = "content",
                     id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> set facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_roaring(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_containers", "Int32"), ("cardinality", "Int64"),
-                ("vmin", "Int64"), ("vmax", "Int64"),
-                ("value_sum", "Int64"), ("n_array", "Int32"),
-                ("n_bitmap", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, RB_SCHEMA)
+    return map_blobs(df, parse_roaring, RB_SCHEMA, id_col, content_col)

@@ -28,15 +28,14 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.archive import (
     build_gzip,
     gunzip_members,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 RPM_LEAD_MAGIC = b"\xed\xab\xee\xdb"
 HDR_MAGIC = b"\x8e\xad\xe8\x01"
@@ -244,19 +243,4 @@ def extract_rpm_packages(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> package metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_rpm(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("name", None), ("version", None), ("release", None),
-                ("arch", None), ("size_tag", "Int64"),
-                ("n_files", "Int32"), ("file_bytes", "Int64"),
-                ("files_md5", None), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, RPM_SCHEMA)
+    return map_blobs(df, parse_rpm, RPM_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ from __future__ import annotations
 
 import json
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _DTYPE_SIZE = {"I8": 1, "F32": 4, "I32": 4, "F16": 2}
 
@@ -153,19 +153,4 @@ def extract_safetensors(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> tensor facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_safetensors(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_tensors", "Int32"), ("names", None),
-                ("total_params", "Int64"), ("total_bytes", "Int64"),
-                ("value_sum", "Int64"), ("meta_format", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, ST_SCHEMA)
+    return map_blobs(df, parse_safetensors, ST_SCHEMA, id_col, content_col)

@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import math
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def _geom(shape_type: int, pts: list[tuple[int, int]],
@@ -204,18 +204,4 @@ _SHP_SCHEMA = (
 def extract_shp_features(df: DataFrame,
                          content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_shp(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("shape_type", "n_records", "n_null",
-                      "n_points", "n_parts"):
-                out[c] = out[c].astype("Int32")
-            for c in ("x_sum", "y_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _SHP_SCHEMA)
+    return map_blobs(df, parse_shp, _SHP_SCHEMA, id_col, content_col)

@@ -30,10 +30,10 @@ Reference parity: none — beyond-reference storage-recovery operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 WAL_MAGIC_LE = 0x377F0682  # checksum words little-endian
 WAL_MAGIC_BE = 0x377F0683
@@ -159,19 +159,4 @@ def extract_wal_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> recovery-scan facts via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_wal(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("page_size", "Int32"), ("n_frames_file", "Int32"),
-                ("n_valid", "Int32"), ("n_commits", "Int32"),
-                ("db_pages", "Int32"), ("checksum_words", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, WAL_SCHEMA)
+    return map_blobs(df, parse_wal, WAL_SCHEMA, id_col, content_col)

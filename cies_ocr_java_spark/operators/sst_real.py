@@ -29,15 +29,14 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.snappy_real import (
     snappy_compress,
     snappy_decompress,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 SST_MAGIC = 0xDB4775248B80FB57
 _RESTART_INTERVAL = 4
@@ -257,19 +256,4 @@ def extract_sst_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> table facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_sst(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_blocks", "Int32"), ("n_entries", "Int32"),
-                ("n_restarts", "Int32"), ("compression", None),
-                ("keys_md5", None), ("values_md5", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, SST_SCHEMA)
+    return map_blobs(df, parse_sst, SST_SCHEMA, id_col, content_col)

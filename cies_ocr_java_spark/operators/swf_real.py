@@ -21,15 +21,14 @@ problem in the reference; structure recovery is beyond-reference.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.inflate import (
     InflateError,
     inflate_zlib,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 class _BitWriter:
@@ -211,18 +210,4 @@ _SWF_SCHEMA = (
 
 def extract_swf_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_swf(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_tags", "n_frames", "frame_count",
-                      "frame_rate_x256", "stage_w", "stage_h",
-                      "compressed"):
-                out[c] = out[c].astype("Int32")
-            out["tag_bytes"] = out["tag_bytes"].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _SWF_SCHEMA)
+    return map_blobs(df, parse_swf, _SWF_SCHEMA, id_col, content_col)

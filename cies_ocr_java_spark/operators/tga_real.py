@@ -30,10 +30,9 @@ reference; codec-layer structure recovery is beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _FOOTER_SIG = b"TRUEVISION-XFILE.\x00"
 
@@ -204,18 +203,4 @@ _TGA_SCHEMA = (
 
 def extract_tga_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_tga(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "depth", "rle",
-                      "has_footer"):
-                out[c] = out[c].astype("Int32")
-            for c in ("px_sum", "row0_sum"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _TGA_SCHEMA)
+    return map_blobs(df, parse_tga, _TGA_SCHEMA, id_col, content_col)

@@ -22,15 +22,14 @@ Reference parity: none — beyond-reference media operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.pdf_real import (
     _lzw_decode,
     _lzw_encode,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _SHORT, _LONG = 3, 4
 
@@ -182,20 +181,4 @@ def extract_tiff_lzw(df: DataFrame, content_col: str = "content",
                      id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode_tiff_lzw(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("width", "Int32"), ("height", "Int32"),
-                ("compression", "Int32"), ("n_strips", "Int32"),
-                ("ink_sum", "Int64"), ("byte_order", None),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, TIFF_LZW_SCHEMA)
+    return map_blobs(df, decode_tiff_lzw, TIFF_LZW_SCHEMA, id_col, content_col)

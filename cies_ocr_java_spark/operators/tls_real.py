@@ -24,10 +24,10 @@ delegates TLS to the JVM's HTTP stack).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 EXT_SNI = 0
 EXT_SUPPORTED_GROUPS = 10
@@ -190,19 +190,4 @@ def extract_tls_features(df: DataFrame, content_col: str = "content",
                          id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> ClientHello metadata via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_client_hello(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("sni", None), ("n_ciphers", "Int32"),
-                ("n_grease", "Int32"), ("alpn", None),
-                ("max_version", None), ("n_extensions", "Int32"),
-                ("session_id_len", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, TLS_SCHEMA)
+    return map_blobs(df, parse_client_hello, TLS_SCHEMA, id_col, content_col)

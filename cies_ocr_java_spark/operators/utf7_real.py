@@ -24,10 +24,9 @@ Reference parity: none — beyond-reference mail-encoding operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 _B64 = ("ABCDEFGHIJKLMNOPQRSTUVWXYZ"
         "abcdefghijklmnopqrstuvwxyz0123456789+/")
@@ -106,19 +105,4 @@ def extract_utf7_docs(df: DataFrame, content_col: str = "content",
                       id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded text via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_utf7_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("text", None), ("n_chars", "Int32"),
-                ("n_segments", "Int32"), ("n_nonascii", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, UTF7_SCHEMA)
+    return map_blobs(df, parse_utf7_doc, UTF7_SCHEMA, id_col, content_col)

@@ -24,10 +24,10 @@ Reference parity: none — beyond-reference mail-encoding operator.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def build_uu(name: str, mode: int, payload: bytes) -> bytes:
@@ -122,18 +122,4 @@ def extract_uu_docs(df: DataFrame, content_col: str = "content",
                     id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded facts via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_uu_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("name", None), ("mode", "Int32"),
-                ("n_lines", "Int32"), ("payload_len", "Int32"),
-                ("payload_md5", None), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, UU_SCHEMA)
+    return map_blobs(df, parse_uu_doc, UU_SCHEMA, id_col, content_col)

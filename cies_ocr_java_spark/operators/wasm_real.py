@@ -25,10 +25,10 @@ Reference parity: none — beyond-reference binary-artifact operator.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 WASM_MAGIC = b"\x00asm"
 _KINDS = {0: "func", 1: "table", 2: "memory", 3: "global"}
@@ -244,20 +244,4 @@ def extract_wasm_features(df: DataFrame,
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> module metadata via one Arrow-batched
     mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_wasm(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_types", "Int32"), ("n_funcs", "Int32"),
-                ("n_exports", "Int32"), ("export_names", None),
-                ("mem_min", "Int32"), ("func_names", None),
-                ("code_bytes", "Int32"), ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, WASM_SCHEMA)
+    return map_blobs(df, parse_wasm, WASM_SCHEMA, id_col, content_col)

@@ -25,10 +25,10 @@ exceptions."""
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 __all__ = ["build_webp", "parse_webp", "extract_webp_features",
            "WEBP_FEATURES_SCHEMA"]
@@ -179,27 +179,4 @@ WEBP_FEATURES_SCHEMA = (
 def extract_webp_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> header rows, one Arrow-batched pass."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_webp(b) for b in pdf[content_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "format": [r["format"] for r in rows],
-                    "width": pd.array(
-                        [r["width"] for r in rows], dtype="Int32"),
-                    "height": pd.array(
-                        [r["height"] for r in rows], dtype="Int32"),
-                    "has_alpha": pd.array(
-                        [r["has_alpha"] for r in rows], dtype="Int32"),
-                    "flags": [r["flags"] for r in rows],
-                    "n_chunks": pd.array(
-                        [r["n_chunks"] for r in rows], dtype="Int32"),
-                    "error": [r["error"] for r in rows],
-                }
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        op, WEBP_FEATURES_SCHEMA
-    )
+    return map_blobs(df, parse_webp, WEBP_FEATURES_SCHEMA, id_col, content_col)

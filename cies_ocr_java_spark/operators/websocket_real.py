@@ -24,10 +24,9 @@ beyond-reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 
 def _mask(payload: bytes, key: bytes) -> bytes:
@@ -212,19 +211,4 @@ _WS_SCHEMA = (
 
 def extract_ws_features(df: DataFrame, content_col: str = "content",
                         id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_ws_stream(
-                    None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_frames", "n_messages", "n_control",
-                      "n_fragmented", "close_code"):
-                out[c] = out[c].astype("Int32")
-            for c in ("text_chars", "binary_bytes"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _WS_SCHEMA)
+    return map_blobs(df, parse_ws_stream, _WS_SCHEMA, id_col, content_col)

@@ -32,9 +32,7 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from cies_ocr_java_spark.operators.lzma_real import (
@@ -42,6 +40,7 @@ from cies_ocr_java_spark.operators.lzma_real import (
     _RangeDecoder,
     split_props,
 )
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 XZ_MAGIC = b"\xfd7zXZ\x00"
 _CHECK_SIZES = {0: 0, 1: 4, 4: 8, 10: 32}
@@ -298,19 +297,4 @@ def extract_xz_docs(df: DataFrame, content_col: str = "content",
                     id_col: str = "doc_id") -> DataFrame:
     """(id, content:binary) -> decoded-stream stats via one
     Arrow-batched mapInPandas pass (no shuffle)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [parse_xz_doc(b) for b in pdf[content_col]]
-            out = {"doc_id": pdf[id_col].astype("int64")}
-            for k, dt in [
-                ("n_bytes", "Int64"), ("n_lines", "Int32"),
-                ("text_md5", None), ("check_type", None),
-                ("n_blocks", "Int32"), ("n_chunks", "Int32"),
-                ("error", None),
-            ]:
-                vals = [r[k] for r in rows]
-                out[k] = pd.array(vals, dtype=dt) if dt else vals
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, content_col).mapInPandas(op, XZ_SCHEMA)
+    return map_blobs(df, parse_xz_doc, XZ_SCHEMA, id_col, content_col)

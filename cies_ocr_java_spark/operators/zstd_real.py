@@ -28,10 +28,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from cies_ocr_java_spark.operators.walker import map_blobs
 
 ZSTD_MAGIC = 0xFD2FB528
 _P1 = 0x9E3779B185EBCA87
@@ -303,18 +303,4 @@ _ZSTD_SCHEMA = (
 
 def extract_zstd_features(df: DataFrame, content_col: str = "content",
                           id_col: str = "doc_id") -> DataFrame:
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                r = parse_zstd(None if blob is None else bytes(blob))
-                rows.append({"doc_id": int(i), **r})
-            out = pd.DataFrame(rows)
-            for c in ("n_frames", "n_skippable", "n_blocks", "n_rle",
-                      "content_len"):
-                out[c] = out[c].astype("Int32")
-            for c in ("window_size", "dict_id"):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.mapInPandas(op, _ZSTD_SCHEMA)
+    return map_blobs(df, parse_zstd, _ZSTD_SCHEMA, id_col, content_col)

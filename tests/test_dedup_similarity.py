@@ -244,57 +244,6 @@ def test_status_counts_stream(spark, corpus_dir, tmp_path):
     assert got == want
 
 
-def test_streaming_exact_dedup_across_microbatches(spark, tmp_path):
-    """Duplicates must be dropped across separate triggers: the seen-set
-    lives in the state store, not in the batch."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cies_ocr_java_spark.streaming.dedup_stream import streaming_exact_dedup
-
-    src = tmp_path / "stream-src"
-    src.mkdir()
-    # batch 1: two docs, one internal dup pair (d1/d2 same content)
-    pq.write_table(
-        pa.table({"doc_id": ["d2", "d1", "d3"],
-                  "text": ["same content", "same content", "unique one"]}),
-        str(src / "batch1.parquet"),
-    )
-    # batch 2: a cross-batch dup of d1 plus a new doc
-    pq.write_table(
-        pa.table({"doc_id": ["d4", "d5"],
-                  "text": ["same content", "another unique"]}),
-        str(src / "batch2.parquet"),
-    )
-    # FileStreamSource orders files by mtime; the two writes can land in the
-    # same clock tick, which made trigger order (and thus which duplicate
-    # wins) nondeterministic. Pin batch1 strictly older.
-    import os, time  # noqa: E401
-
-    now = time.time()
-    os.utime(src / "batch1.parquet", (now - 10, now - 10))
-    os.utime(src / "batch2.parquet", (now, now))
-    stream = (
-        spark.readStream.schema("doc_id string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_exact_dedup(stream)
-    q = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName("dedup_stream_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM dedup_stream_test").collect()
-    got = {r["doc_id"] for r in rows}
-    # d1 wins its batch (min doc_id), d4 deduped across batches
-    assert got == {"d1", "d3", "d5"}
-    assert len(rows) == 3
-
-
 def test_cosine_near_dup_pairs_bucketed(spark):
     rows = [
         (0, [1.0, 1.0, 1.0, 1.0]),
@@ -460,75 +409,6 @@ def test_connected_components_chain_and_isolate(spark):
     spark.catalog.clearCache()
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """transformWithStateInPandas keeps per-key ValueState across
-    microbatches: batch 2's totals include batch 1's events.
-
-    Skipped where google.protobuf is unavailable (the TWS Python protocol
-    requires it; this sandbox lacks it — running_totals.py docstring)."""
-    pytest.importorskip("google.protobuf")
-    import os
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cies_ocr_java_spark.streaming.running_totals import (
-        ROCKSDB_PROVIDER,
-        running_totals,
-    )
-
-    src = tmp_path / "rt-src"
-    src.mkdir()
-    pq.write_table(
-        pa.table({
-            "user_id": pa.array([1, 1, 2], type=pa.int64()),
-            "value": pa.array([1.0, 2.0, 10.0], type=pa.float64()),
-        }),
-        str(src / "b1.parquet"),
-    )
-    pq.write_table(
-        pa.table({
-            "user_id": pa.array([1, 2], type=pa.int64()),
-            "value": pa.array([4.0, 20.0], type=pa.float64()),
-        }),
-        str(src / "b2.parquet"),
-    )
-    now = time.time()
-    os.utime(src / "b1.parquet", (now - 10, now - 10))
-    os.utime(src / "b2.parquet", (now, now))
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        out = running_totals(stream)
-        q = (
-            out.writeStream.outputMode("update").format("memory")
-            .queryName("rt_test")
-            .option("checkpointLocation", str(tmp_path / "rt-ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql("SELECT * FROM rt_test").collect()
-    # last emission per user must be the cross-batch running total
-    last = {}
-    for r in rows:
-        last[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert last[1] == (3, 7.0)
-    assert last[2] == (2, 30.0)
-
-
 def test_connected_components_matches_union_find(spark):
     """Randomized graphs: Spark label propagation must equal an
     independent union-find on every one. Drawn once per suite run (a
@@ -578,54 +458,6 @@ def test_connected_components_matches_union_find(spark):
         }
         assert got == want, f"trial {trial}: {got} != {want}"
         spark.catalog.clearCache()
-
-
-def test_streaming_dedup_state_survives_query_restart(spark, tmp_path):
-    """Resumability for STREAMING: stop the query, deliver more data,
-    start a NEW query instance on the same checkpoint — the seen-set must
-    come back from the state store, so a duplicate of a batch-1 doc
-    arriving after the restart is still dropped. (File sink, not memory:
-    the memory sink refuses checkpoint recovery.)"""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cies_ocr_java_spark.streaming.dedup_stream import streaming_exact_dedup
-
-    src = tmp_path / "restart-src"
-    src.mkdir()
-    ckpt = str(tmp_path / "restart-ckpt")
-    sink = str(tmp_path / "restart-sink")
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("doc_id string, text string")
-            .parquet(str(src))
-        )
-        q = (
-            streaming_exact_dedup(stream)
-            .writeStream.outputMode("append").format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-
-    pq.write_table(
-        pa.table({"doc_id": ["d1"], "text": ["original content"]}),
-        str(src / "b1.parquet"),
-    )
-    run_once()
-    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {"d1"}
-
-    # after shutdown: a content-duplicate of d1 and a fresh doc arrive
-    pq.write_table(
-        pa.table({"doc_id": ["d9", "d2"], "text": ["original content", "new content"]}),
-        str(src / "b2.parquet"),
-    )
-    run_once()
-    # d9 is dropped purely via state restored from the checkpoint
-    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {"d1", "d2"}
 
 
 def test_streaming_sessionize_event_time_timeout(spark, tmp_path):
@@ -1087,54 +919,6 @@ def test_edit1_pairs_symspell_exactness(spark):
         if lev(p[0], p[1]) <= 1
     }
     assert got == expect
-
-
-def test_streaming_heavy_hitters_misra_gries_across_batches(spark, tmp_path):
-    """The MG sketch must persist across triggers with bounded state and
-    apply the batched decrement exactly: with k=2 and one shard, batch 1
-    {a:5, b:2, c:1} reduces (cut = 3rd-largest = 1) to {a:4, b:1}; batch 2
-    adds {c:4} and reduces (cut = 1) to {a:3, c:3}. Counts are lower
-    bounds; the heavy token a survives both reductions."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cies_ocr_java_spark.streaming.heavy_hitters_stream import (
-        streaming_heavy_hitters,
-    )
-
-    src = tmp_path / "hh-src"
-    src.mkdir()
-    ckpt = str(tmp_path / "hh-ckpt")
-    stream = spark.readStream.schema("token string").parquet(str(src))
-    out = streaming_heavy_hitters(stream, k=2, shards=1)
-    q = (
-        out.writeStream.outputMode("update").format("memory")
-        .queryName("hh_stream").option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        pq.write_table(
-            pa.table({"token": ["a"] * 5 + ["b"] * 2 + ["c"]}),
-            str(src / "b1.parquet"),
-        )
-        q.processAllAvailable()
-        t1 = {
-            (r["token"], r["lower_count"])
-            for r in spark.sql("SELECT * FROM hh_stream").collect()
-        }
-        assert t1 == {("a", 4), ("b", 1)}
-
-        pq.write_table(
-            pa.table({"token": ["c"] * 4}), str(src / "b2.parquet")
-        )
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM hh_stream").collect()
-        t_all = {(r["token"], r["lower_count"]) for r in rows}
-        # trigger-2 sketch rows present; b decremented away, a survives
-        assert {("a", 3), ("c", 3)} <= t_all
-        assert t_all == {("a", 4), ("b", 1), ("a", 3), ("c", 3)}
-    finally:
-        q.stop()
 
 
 def test_containment_prefix_filter_is_lossless_vs_brute_force(spark):

@@ -1013,3 +1013,22 @@ class TestXrefPredictor:
             b"<< /DecodeParms << /Predictor 1 >> >>", b"abc") == b"abc"
         assert _apply_predictor(b"<< /DecodeParms << >> >>",
                                 b"abc") == b"abc"
+
+
+@pytest.mark.parametrize("method", ["rc4-40", "rc4-128", "aes-128"])
+def test_interleaved_walk_decrypts_pages_in_encrypted_objstm(method):
+    """An encrypted PDF-1.5 keeps its Pages node and page dicts inside an
+    encrypted /ObjStm; the interleaved walk must decrypt them the way
+    parse_real_pdf does, not fail on the ciphertext."""
+    from cies_ocr_java_spark.operators.pdf_crypt import build_encrypted_pdf15
+    from cies_ocr_java_spark.operators.pdf_real import (
+        parse_pdf_interleaved,
+        parse_real_pdf,
+    )
+
+    data = build_encrypted_pdf15("hello encrypted world", method)
+    assert parse_real_pdf(data)["text"] == "hello encrypted world"
+    assert parse_pdf_interleaved(data) == {
+        "spans": [{"kind": "text", "text": "hello encrypted world"}],
+        "error": None,
+    }

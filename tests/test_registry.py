@@ -51,3 +51,25 @@ def test_both_ico_variants_are_distinct_entries():
         q.QUERIES["media_ico_decode"]
         is not q.QUERIES["media_ico_multi_decode"]
     )
+
+
+def test_http_range_oracle_marks_a_trailing_partial_group_incomplete(
+        spark, tmp_path):
+    """A corpus whose size is not a multiple of 4 leaves a last group with
+    fewer than four ranged fragments. The engine's exact-tiling fold
+    calls it incomplete; the oracle must too, not only on poison flags.
+    The query reads only ``doc_id``, so doc ids 0..497 stand in for the
+    sf0.01 documents table cut to 498 rows."""
+    import duckdb
+
+    from tools.check_queries import compare
+
+    docs = str(tmp_path / "documents.parquet")
+    duckdb.sql(f"COPY (SELECT range AS doc_id FROM range(498)) "
+               f"TO '{docs}' (FORMAT parquet)")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+    name = "http_range_reassembly"
+    ok, msg = compare(name, q.QUERIES[name](spark, str(tmp_path)), con,
+                      q.ORACLES[name])
+    assert ok, msg
